@@ -8,9 +8,11 @@ name. All callables are module-level → pickle-safe for UDF closures.
 
 from __future__ import annotations
 
+import hashlib
+
 from .engine.settings import Settings
 
-__all__ = ["PIPELINE_CONFIGS", "settings_for"]
+__all__ = ["PIPELINE_CONFIGS", "fingerprint", "settings_for"]
 
 
 def mergeable_by_class(e1, e2):
@@ -60,3 +62,25 @@ def settings_for(name_or_settings) -> Settings:
             )
         _CACHE[name] = Settings(PIPELINE_CONFIGS[name])
     return _CACHE[name]
+
+
+def fingerprint(settings) -> str:
+    """Content hash of a config, identical in every process.
+
+    cloudpickle (the serializer Spark ships UDF closures with) hashes hooks
+    by their code, so two configs that differ only in a ``sanitize_href``
+    lambda get different digests. Set-valued fields are sorted first:
+    a pickled set's byte order follows ``PYTHONHASHSEED``. A hook's code
+    includes its source file and line, so a reinstalled or edited package
+    may hash differently; a checkpointed resume then refuses, which is the
+    safe direction."""
+    from pyspark import cloudpickle
+
+    state = {
+        k: sorted(v) if isinstance(v, set) else v
+        for k, v in settings_for(settings).__getstate__().items()
+    }
+    state["attributes"] = {
+        tag: sorted(allowed) for tag, allowed in sorted(state["attributes"].items())
+    }
+    return hashlib.sha256(cloudpickle.dumps(state)).hexdigest()[:16]

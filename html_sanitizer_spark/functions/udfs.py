@@ -18,14 +18,11 @@ Two shapes:
 
 from __future__ import annotations
 
-import hashlib
-import uuid
-
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..configs import settings_for
+from ..configs import fingerprint, settings_for
 from ..engine.core import sanitize
 
 __all__ = [
@@ -54,6 +51,12 @@ SAFE_RESULT_TYPE = T.StructType(
     [
         T.StructField("text", T.StringType()),
         T.StructField("err", T.BooleanType()),
+    ]
+)
+SAFE_SPANS_TYPE = T.StructType(
+    [
+        T.StructField("spans", SPANS_TYPE),
+        T.StructField("n_span_errors", T.IntegerType()),
     ]
 )
 
@@ -126,35 +129,15 @@ def make_sanitize_udf(settings=None, memoize: int = 0, on_error: str = "raise"):
     return sanitize_batch
 
 
-# per-python-worker memo store, keyed by a deterministic config fingerprint
+# per-python-worker memo store, keyed by (config fingerprint, memoize, policy):
+# equal configs share one cache, different configs never collide. The policy
+# is part of the key because cached VALUES differ by policy ("keep" caches
+# the original fragment for poison inputs, "null" caches None)
 _worker_memo: dict = {}
 _WORKER_MEMO_MAX_CONFIGS = 8
 
 
-def _settings_fingerprint(settings_obj, memoize: int, policy: str = "raise") -> str:
-    """Content hash of (settings, memoize, error policy), computed once
-    driver-side.
-
-    Uses cloudpickle (the same serializer Spark ships the closure with), so
-    lambdas/processor callables hash by code, not by memory address: equal
-    configs collapse to one shared worker cache, different configs can never
-    collide. The policy is part of the key because cached VALUES differ by
-    policy ("keep" caches the original fragment for poison inputs, "null"
-    caches None) — sharing one cache across policies would replay the wrong
-    fallback. Falls back to a uuid (unique, unshared — always safe) for the
-    rare unpicklable settings object."""
-    try:
-        from pyspark import cloudpickle
-
-        payload = cloudpickle.dumps(
-            (settings_obj.__getstate__(), memoize, policy)
-        )
-        return hashlib.sha256(payload).hexdigest()
-    except Exception:
-        return uuid.uuid4().hex
-
-
-def _worker_cache(memo_key: str) -> dict:
+def _worker_cache(memo_key: tuple) -> dict:
     """Executor-side cache lookup with stale-config eviction: a long-lived
     reused worker that has seen many distinct configs drops old caches
     rather than accumulating them (ADVICE r02). Eviction is per-entry LRU
@@ -186,9 +169,7 @@ def _make_text_kernel(settings_obj, memoize: int, on_error: str):
     skips re-raising on repeats."""
     keep = on_error == "keep"
     memo_key = (
-        _settings_fingerprint(settings_obj, memoize, on_error)
-        if memoize > 0
-        else None
+        (fingerprint(settings_obj), memoize, on_error) if memoize > 0 else None
     )
 
     def run(text: str):
@@ -223,50 +204,63 @@ def make_span_array_udf(settings=None, memoize: int = 0, on_error: str = "raise"
 
     ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8 —
     the nested plan honors the same knobs instead of rejecting them);
-    keep/null are applied per span inside the array. Per-span error
-    FLAGS need the arrow path (sanitize_spans_arrow with_errors=True) —
-    this UDF's output type is the spans array alone.
+    keep/null are applied per span inside the array. Non-"raise" modes
+    return struct<spans, n_span_errors> (the per-document poison count),
+    as make_sanitize_udf returns struct<text, err>.
     """
     if on_error not in ("raise", "keep", "null"):
         raise ValueError(f"on_error must be raise|keep|null, got {on_error!r}")
     settings_obj = settings_for(settings)
     kernel = _make_text_kernel(settings_obj, memoize, on_error)
 
+    def fix(spans):
+        if spans is None:
+            return None, None
+        out = []
+        n_err = 0
+        for s in spans:
+            if s is None:  # null span element: preserve, don't rebuild
+                out.append(None)
+                continue
+            # Arrow hands array<struct> values to pandas as dicts (or
+            # Rows); normalize access defensively.
+            get = s.get if isinstance(s, dict) else lambda k, _s=s: _s[k]
+            kind = get("kind")
+            text = get("text")
+            if kind == "text" and text is not None:
+                text, err = kernel(text)
+                n_err += err
+            out.append(
+                {
+                    "kind": kind,
+                    "text": text,
+                    "media_ref": get("media_ref"),
+                    "offset": get("offset"),
+                }
+            )
+        return out, n_err
+
+    if on_error != "raise":
+
+        @F.pandas_udf(SAFE_SPANS_TYPE)
+        def sanitize_spans_batch_safe(spans_col: pd.Series) -> pd.DataFrame:
+            fixed = [fix(v) for v in spans_col]
+            return pd.DataFrame({
+                "spans": pd.Series([f[0] for f in fixed], dtype="object"),
+                "n_span_errors": pd.Series([f[1] for f in fixed], dtype="object"),
+            })
+
+        return sanitize_spans_batch_safe
+
     @F.pandas_udf(SPANS_TYPE)
     def sanitize_spans_batch(spans_col: pd.Series) -> pd.Series:
-        def fix(spans):
-            if spans is None:
-                return None
-            out = []
-            for s in spans:
-                if s is None:  # null span element: preserve, don't rebuild
-                    out.append(None)
-                    continue
-                # Arrow hands array<struct> values to pandas as dicts (or
-                # Rows); normalize access defensively.
-                get = s.get if isinstance(s, dict) else lambda k, _s=s: _s[k]
-                kind = get("kind")
-                text = get("text")
-                if kind == "text" and text is not None:
-                    text = kernel(text)[0]
-                out.append(
-                    {
-                        "kind": kind,
-                        "text": text,
-                        "media_ref": get("media_ref"),
-                        "offset": get("offset"),
-                    }
-                )
-            return out
-
-        return pd.Series([fix(v) for v in spans_col], dtype="object")
+        return pd.Series([fix(v)[0] for v in spans_col], dtype="object")
 
     return sanitize_spans_batch
 
 
 def sanitize_spans_arrow(
     df, settings=None, memoize: int = 0, on_error: str = "raise",
-    with_errors: bool = False,
 ):
     """Nested zero-extra-shuffle path via ``mapInArrow`` (SURVEY.md §2.10):
     operates on pyarrow RecordBatches directly — the flattened struct
@@ -275,30 +269,22 @@ def sanitize_spans_arrow(
     Same semantics as make_span_array_udf; measurably faster per batch.
 
     ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8):
-    keep/null are applied per span. ``with_errors=True`` (requires a
-    non-"raise" policy) appends an ``n_span_errors`` int column — the
-    per-document poison count, computed from the list offsets — so nested
-    users get the same quarantine/lineage visibility the exploded frame's
-    span_error flag gives (filter n_span_errors > 0 → quarantine table).
+    keep/null are applied per span, and a non-"raise" policy appends an
+    ``n_span_errors`` int column — the per-document poison count, computed
+    from the list offsets — the same column the exploded plan's
+    reassembly carries (filter n_span_errors > 0 → quarantine table).
     """
     import pyarrow as pa
 
     if on_error not in ("raise", "keep", "null"):
         raise ValueError(f"on_error must be raise|keep|null, got {on_error!r}")
-    if with_errors and on_error == "raise":
-        raise ValueError(
-            "with_errors=True needs on_error='keep' or 'null' — under "
-            "'raise' a poison span fails the job, so the count column "
-            "would be constant zero"
-        )
+    with_errors = on_error != "raise"
     settings_obj = settings_for(settings)
     kernel = _make_text_kernel(settings_obj, memoize, on_error)
     schema = df.schema
     if with_errors:
-        from pyspark.sql import types as _T
-
-        schema = _T.StructType(
-            schema.fields + [_T.StructField("n_span_errors", _T.IntegerType())]
+        schema = T.StructType(
+            schema.fields + [T.StructField("n_span_errors", T.IntegerType())]
         )
 
     def fix_batches(batches):

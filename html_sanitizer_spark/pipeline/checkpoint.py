@@ -1,4 +1,5 @@
-"""Checkpointed, idempotently-resumable batch runs (north_rule requirement).
+"""Checkpointed, idempotently-resumable batch runs: the one write path the
+CLI uses for every mode and plan.
 
 Production design targets Iceberg: each bucket commit is an Iceberg
 append/overwrite snapshot and the manifest is redundant with the table's own
@@ -10,17 +11,21 @@ runs over plain parquet with an Iceberg-style JSON manifest we own:
       _staging/bucket=<k>/...     # ONE-pass bucketed copy of the input
       bucket=<k>/part-*.parquet   # one dir per doc_id hash bucket
       _lineage/bucket=<k>/...     # per-partition lineage rows per bucket
+      _quarantine/bucket=<k>/...  # docs with n_span_errors > 0 (non-raise)
 
 Protocol:
+- Buckets are plan-agnostic: each runs ONE document-level plan
+  (``sanitize_spans`` exploded or nested, or ``extract_spans``) whose
+  (doc_id, spans[, n_span_errors]) frame is persisted once and feeds the
+  data write (without the count), the quarantine and ``lineage_metrics``.
 - bucket(doc) = pmod(xxhash64(doc_id), n_buckets) — stable under retries.
-- The input is staged ONCE with ``partitionBy(bucket)`` (a single full
-  scan + hash-partitioned write); each per-bucket job then reads only its
-  own ``bucket=<k>`` directory — partition-pruned IO, never a rescan of
-  the whole input. A filter on a *computed* xxhash64 column cannot push
-  down, so without staging an n-bucket run is n full scans of a 100 TB
-  table. On a real lakehouse the staging pass is free: declare
-  ``bucket(n, doc_id)`` in the Iceberg partition spec and the per-bucket
-  reads prune on the table's own partition metadata.
+- With more than one bucket the input is staged ONCE with
+  ``partitionBy(bucket)``, so each per-bucket job reads only its own
+  ``bucket=<k>`` directory: a filter on a *computed* xxhash64 column
+  cannot push down, and without staging an n-bucket run is n full scans
+  of the input. On a real lakehouse the staging pass is free: declare
+  ``bucket(n, doc_id)`` in the Iceberg partition spec. A single bucket
+  reads the input directly: no copy.
 - A bucket is processed with overwrite semantics (re-running a
   half-written bucket is safe) and only then recorded in the manifest;
   the manifest rename is the commit point.
@@ -29,8 +34,12 @@ Protocol:
   tiny). Staging carries its own commit marker (same atomic-rename
   pattern) so a crash mid-staging restages while a crash mid-bucket
   reuses the staged copy.
-- The manifest records a config fingerprint; resuming with a different
-  config or bucket count refuses rather than mixing outputs.
+- The manifest and the staging marker record a fingerprint of
+  ``configs.fingerprint(settings)`` (hooks hash by code), the mode and,
+  in extract mode, ``max_link_density``; the manifest also records the
+  on_error policy. Resuming with a different fingerprint, policy or bucket
+  count refuses. The plan (exploded or nested) is left out: both agree
+  span for span.
 """
 
 from __future__ import annotations
@@ -38,14 +47,16 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..configs import settings_for
-from .job import explode_spans, lineage_metrics, reassemble_spans, sanitize_exploded
+from ..configs import fingerprint
+from .iceberg_lite import IcebergLiteTable
+from .job import extract_spans, lineage_metrics, sanitize_spans
 
 __all__ = ["CheckpointedRun", "run_checkpointed"]
 
@@ -55,7 +66,7 @@ STAGING_MARKER = "_staging_commit.json"
 
 
 def _stage_bucketed(df: DataFrame, out_dir: str, n_buckets: int,
-                    fingerprint: str) -> str:
+                    fp: str) -> str:
     """One-pass bucketed staging write (the Iceberg ``bucket(n, doc_id)``
     partition-spec analog): every later per-bucket read prunes to its own
     ``bucket=<k>`` directory instead of rescanning the input. Committed via
@@ -67,7 +78,7 @@ def _stage_bucketed(df: DataFrame, out_dir: str, n_buckets: int,
     if os.path.exists(marker):
         with open(marker) as fh:
             m = json.load(fh)
-        if m["n_buckets"] == n_buckets and m["config_fingerprint"] == fingerprint:
+        if m["n_buckets"] == n_buckets and m["config_fingerprint"] == fp:
             return staging
     (
         df.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)))
@@ -77,32 +88,9 @@ def _stage_bucketed(df: DataFrame, out_dir: str, n_buckets: int,
     )
     fd, tmp = tempfile.mkstemp(dir=staging, prefix="._staging")
     with os.fdopen(fd, "w") as fh:
-        json.dump({"n_buckets": n_buckets, "config_fingerprint": fingerprint}, fh)
+        json.dump({"n_buckets": n_buckets, "config_fingerprint": fp}, fh)
     os.replace(tmp, marker)
     return staging
-
-
-def _config_fingerprint(settings_obj) -> str:
-    basis = {
-        "tags": sorted(settings_obj.tags),
-        "empty": sorted(settings_obj.empty),
-        "separate": sorted(settings_obj.separate),
-        "whitespace": sorted(settings_obj.whitespace),
-        "attributes": {k: sorted(v) for k, v in sorted(settings_obj.attributes.items())},
-        "keep_typographic_whitespace": settings_obj.keep_typographic_whitespace,
-        "add_nofollow": bool(settings_obj.add_nofollow),
-        "autolink": repr(settings_obj.autolink),
-        "hooks": [
-            getattr(f, "__qualname__", repr(f))
-            for f in (
-                *settings_obj.element_preprocessors,
-                *settings_obj.element_postprocessors,
-                settings_obj.sanitize_href,
-                settings_obj.is_mergeable,
-            )
-        ],
-    }
-    return hashlib.sha256(json.dumps(basis, sort_keys=True).encode()).hexdigest()[:16]
 
 
 @dataclass
@@ -164,62 +152,72 @@ class CheckpointedRun:
         os.replace(tmp, self.manifest_path)
 
 
+_PLANS = {"sanitize": sanitize_spans, "extract": extract_spans}
+_CACHE_AQE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _persist_coalesced(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``persist()`` that keeps AQE's final partition coalescing: Spark
+    plans a cached frame with it off, so each bucket would write one file
+    per shuffle partition. The setting is read when the cache is planned."""
+    prev = spark.conf.get(_CACHE_AQE)
+    spark.conf.set(_CACHE_AQE, "true")
+    try:
+        return df.persist()
+    finally:
+        spark.conf.set(_CACHE_AQE, prev)
+
+
 def run_checkpointed(
     spark: SparkSession,
     df: DataFrame,
     out_dir: str,
-    settings=None,
     n_buckets: int = 8,
-    salt_buckets: int = 32,
-    fail_after_bucket: int | None = None,
+    mode: str = "sanitize",
     table_format: str = "dirs",
-    on_error: str = "raise",
-    memoize: int = 0,
+    fail_after_bucket: int | None = None,
+    **plan,
 ) -> CheckpointedRun:
-    """Sanitize ``df`` into ``out_dir`` bucket-by-bucket with resume.
+    """Run ``mode``'s document-level plan over ``df`` into ``out_dir``
+    bucket-by-bucket with resume.
 
+    ``plan`` keywords go unchanged to ``sanitize_spans`` (mode "sanitize")
+    or ``extract_spans`` (mode "extract"). A non-raise ``on_error`` adds
+    ``out_dir/_quarantine/bucket=<k>``: the documents with
+    ``n_span_errors > 0``; lineage carries per-partition n_errors either way.
     ``table_format``: "dirs" writes one overwritable parquet dir per bucket;
     "iceberg-lite" appends each bucket as a snapshot of an
     :class:`IcebergLiteTable` (production: a real Iceberg append), keeping
     the resume manifest as the source of truth for which buckets committed.
     ``fail_after_bucket`` is a test hook: raise after committing that many
     buckets to simulate a mid-run crash.
-    ``on_error`` != "raise" routes poison spans to an explicit quarantine
-    table (``out_dir/_quarantine/bucket=<k>``, the exploded rows with their
-    span_error flag) in addition to the keep/null output policy — lineage
-    carries per-partition n_errors either way. The policy is recorded in
-    the manifest; resuming under a different policy refuses.
     """
-    settings_obj = settings_for(settings)
-    fp = _config_fingerprint(settings_obj)
-    run = CheckpointedRun.load_or_create(out_dir, n_buckets, fp, on_error)
-    table = None
-    if table_format == "iceberg-lite":
-        from .iceberg_lite import IcebergLiteTable
-
-        table = IcebergLiteTable(os.path.join(out_dir, "table"))
+    plan_fn = _PLANS[mode]
+    key = [fingerprint(plan.get("settings")), mode]
+    if mode == "extract":
+        key.append(plan.get("max_link_density"))
+    fp = hashlib.sha256(json.dumps(key).encode()).hexdigest()[:16]
+    run = CheckpointedRun.load_or_create(out_dir, n_buckets, fp,
+                                         plan.get("on_error", "raise"))
+    table = (IcebergLiteTable(os.path.join(out_dir, "table"))
+             if table_format == "iceberg-lite" else None)
 
     todo = [b for b in range(n_buckets) if b not in run.done]
-    staging = _stage_bucketed(df, out_dir, n_buckets, fp) if todo else None
+    staging = (_stage_bucketed(df, out_dir, n_buckets, fp)
+               if todo and n_buckets > 1 else None)
     for k, bucket in enumerate(todo):
-        bucket_path = os.path.join(staging, f"bucket={bucket}")
-        if os.path.exists(bucket_path):
+        if staging is None:
+            part = df
+        elif os.path.exists(os.path.join(staging, f"bucket={bucket}")):
             # partition-pruned read: only this bucket's files are scanned
-            part = spark.read.schema(df.schema).parquet(bucket_path)
+            part = spark.read.schema(df.schema).parquet(
+                os.path.join(staging, f"bucket={bucket}"))
         else:
             # hash bucket received no rows — still emit an (empty) committed
             # output dir so read_checkpointed's bucket=* glob stays uniform
             part = spark.createDataFrame([], df.schema)
-        clean = sanitize_exploded(explode_spans(part), settings_obj, salt_buckets,
-                                  on_error=on_error, memoize=memoize)
-        clean = clean.persist()
-        result = reassemble_spans(clean, two_phase=True)
-        if on_error != "raise":
-            clean.filter(F.col("span_error")).select(
-                "doc_id", "pos", "span"
-            ).write.mode("overwrite").parquet(
-                os.path.join(out_dir, "_quarantine", f"bucket={bucket}")
-            )
+        docs = _persist_coalesced(spark, plan_fn(spark, part, **plan))
+        data = docs.drop("n_span_errors")
         if table is not None:
             # idempotence on crash-between-commit-points: if a prior attempt
             # already snapshotted this bucket (table commit landed, resume
@@ -230,23 +228,25 @@ def run_checkpointed(
                 for s in table.snapshots()
             )
             if not already:
-                table.append(result, summary={"bucket": bucket, "config": fp})
+                table.append(data, summary={"bucket": bucket, "config": fp})
         else:
-            result.write.mode("overwrite").parquet(
+            data.write.mode("overwrite").parquet(
                 os.path.join(out_dir, f"bucket={bucket}")
             )
-        lineage_metrics(clean).withColumn("bucket", F.lit(bucket)).write.mode(
+        if "n_span_errors" in docs.columns:
+            docs.filter(F.col("n_span_errors") > 0).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(out_dir, "_quarantine", f"bucket={bucket}"))
+        lineage_metrics(docs).withColumn("bucket", F.lit(bucket)).write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, "_lineage", f"bucket={bucket}"))
-        clean.unpersist()
+        docs.unpersist()
         run.commit_bucket(bucket)
         if fail_after_bucket is not None and k + 1 >= fail_after_bucket:
             raise RuntimeError(f"injected failure after bucket {bucket}")
     if staging is not None and len(run.done) == n_buckets:
         # every bucket committed: the staged copy is dead weight, drop it
         # (an Iceberg bucket partition spec has no copy to drop)
-        import shutil
-
         shutil.rmtree(staging, ignore_errors=True)
     return run
 
@@ -255,7 +255,5 @@ def read_checkpointed(
     spark: SparkSession, out_dir: str, table_format: str = "dirs"
 ) -> DataFrame:
     if table_format == "iceberg-lite":
-        from .iceberg_lite import IcebergLiteTable
-
         return IcebergLiteTable(os.path.join(out_dir, "table")).read(spark)
     return spark.read.parquet(os.path.join(out_dir, "bucket=*"))

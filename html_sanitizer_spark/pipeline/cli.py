@@ -3,11 +3,14 @@
     spark-submit --py-files engine.zip -m ...     (cluster)
     python -m html_sanitizer_spark.pipeline.cli \
         --input /data/spans --output /data/clean \
-        --config default --buckets 16 --salt 64 [--resume] [--nested]
+        --config default --buckets 16 --salt 64 [--nested] [--mode extract]
 
-Reads a (doc_id, spans) parquet/Iceberg table, sanitizes text spans,
-writes sanitized docs + per-partition lineage + an atomic resume manifest.
-``scripts/build_pyfiles.py`` produces the --py-files zip.
+Reads a (doc_id, spans) parquet/json/csv input, sanitizes (or extracts the
+main content of) text spans, and writes every mode through
+``checkpoint.run_checkpointed``: docs + per-partition lineage (+ quarantine
+under a non-raise --on-error) + an atomic resume manifest. Rerunning the
+same command into the same --output resumes. ``scripts/build_pyfiles.py``
+produces the --py-files zip.
 """
 
 from __future__ import annotations
@@ -22,7 +25,6 @@ from pyspark.sql import functions as F
 # with the --py-files zip on PYTHONPATH (also works under python -m)
 from html_sanitizer_spark.configs import settings_for
 from html_sanitizer_spark.pipeline.checkpoint import run_checkpointed
-from html_sanitizer_spark.pipeline.job import extract_spans, sanitize_spans
 from html_sanitizer_spark.pipeline.session import get_spark
 from html_sanitizer_spark.pipeline.synth import DOC_SCHEMA
 
@@ -75,17 +77,20 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--config", default="default")
     ap.add_argument("--buckets", type=int, default=16,
-                    help="doc_id-hash checkpoint buckets (resume granularity)")
+                    help="doc_id-hash checkpoint buckets (resume granularity);"
+                         " 1 reads the input directly, without a staged copy")
     ap.add_argument("--salt", type=int, default=64,
                     help="salt buckets for the sanitize-stage shuffle")
     ap.add_argument("--nested", action="store_true",
-                    help="zero-reassembly-shuffle plan (no mega-doc skew)")
-    ap.add_argument("--no-checkpoint", action="store_true",
-                    help="single write, no manifest/resume")
+                    help="sanitize mode: one pass per whole document, no"
+                         " reassembly shuffles (for tame doc sizes; the"
+                         " default exploded plan spreads mega-docs)")
     ap.add_argument("--on-error", choices=("raise", "keep", "null"),
                     default="raise",
-                    help="poison-span policy; non-raise routes errored spans"
-                         " to <output>/_quarantine and counts them in lineage")
+                    help="sanitize mode: poison-span policy; keep/null write"
+                         " documents with errored spans to"
+                         " <output>/_quarantine and count them in lineage"
+                         " n_errors")
     ap.add_argument("--memoize", type=int, default=0,
                     help="per-worker sanitize output cache size (exact; for"
                          " boilerplate-heavy corpora)")
@@ -95,48 +100,29 @@ def main(argv: list[str] | None = None) -> int:
                     help="sanitize = allowlist-rewrite text spans (default);"
                          " extract = main-content extraction (boilerplate"
                          " strip via DOM heuristics, engine/extract.py) on"
-                         " the same interleaved-span topology — single"
-                         " write, no checkpoint stage")
+                         " the same interleaved-span topology; both write"
+                         " the same checkpointed layout")
     ap.add_argument("--max-link-density", type=float, default=0.5,
                     help="extract mode: atomic-block link-density keep bar")
     args = ap.parse_args(argv)
-
-    settings = settings_for(args.config)  # fail fast on bad config
+    if args.mode == "extract":
+        if args.on_error != "raise":
+            ap.error("--mode extract has no poison policy: drop --on-error")
+        plan = {"max_link_density": args.max_link_density}
+    else:
+        plan = {"settings": settings_for(args.config),  # fail fast on bad config
+                "explode": not args.nested, "on_error": args.on_error,
+                "memoize": args.memoize}
 
     active = SparkSession.getActiveSession()
     spark = active or get_spark("sanitize-job", parallelism=args.parallelism)
-    df = read_input(spark, args.input, args.format)
-
-    if args.mode == "extract":
-        out = extract_spans(
-            spark, df, max_link_density=args.max_link_density,
-            salt_buckets=args.salt,
-        )
-        out.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({"input": args.input, "output": args.output,
-                          "mode": "extract", "buckets_done":
-                          "all (single write)"}))
-        if active is None:
-            spark.stop()
-        return 0
-
-    if args.no_checkpoint or args.nested:
-        out = sanitize_spans(
-            spark, df, settings=settings,
-            explode=not args.nested, salt_buckets=args.salt,
-            on_error=args.on_error, memoize=args.memoize,
-        )
-        out.write.mode("overwrite").parquet(args.output)
-        done = "all (single write)"
-    else:
-        run = run_checkpointed(
-            spark, df, args.output, settings=settings,
-            n_buckets=args.buckets, salt_buckets=args.salt,
-            on_error=args.on_error, memoize=args.memoize,
-        )
-        done = sorted(run.done)
+    run = run_checkpointed(
+        spark, read_input(spark, args.input, args.format), args.output,
+        n_buckets=args.buckets, mode=args.mode, salt_buckets=args.salt, **plan,
+    )
     print(json.dumps({"input": args.input, "output": args.output,
-                      "config": args.config, "buckets_done": done}))
+                      "config": args.config, "mode": args.mode,
+                      "buckets_done": sorted(run.done)}))
     if active is None:
         spark.stop()
     return 0

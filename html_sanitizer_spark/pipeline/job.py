@@ -50,7 +50,6 @@ __all__ = [
     "explode_spans",
     "reassemble_spans",
     "lineage_metrics",
-    "lineage_metrics_nested",
 ]
 
 
@@ -97,16 +96,15 @@ def sanitize_exploded(
         clean = F.when(applies, udf(F.col("span.text"))).otherwise(
             F.col("span.text")
         )
-        err = F.lit(False)
+        err = []
     else:
         # safe modes return struct<text, err>: the poison row is an explicit
-        # flag column (quarantined / counted in lineage), never a silent
-        # pass-through indistinguishable from clean output
+        # span_error flag (summed into the document's n_span_errors by
+        # reassemble_spans), never a silent pass-through
         res = udf(F.col("span.text"))
         clean = F.when(applies, res["text"]).otherwise(F.col("span.text"))
-        err = F.when(applies, F.coalesce(res["err"], F.lit(False))).otherwise(
-            F.lit(False)
-        )
+        err = [F.when(applies, F.coalesce(res["err"], F.lit(False)))
+               .otherwise(F.lit(False)).alias("span_error")]
     new_span = F.struct(
         F.col("span.kind").alias("kind"),
         clean.alias("text"),
@@ -124,16 +122,15 @@ def sanitize_exploded(
         # either stays null instead of being rebuilt as a struct of null
         # fields, matching the arrow/pandas nested paths (ADVICE r02)
         F.when(F.col("span").isNotNull(), new_span).alias("span"),
-        err.alias("span_error"),
+        *err,
     )
 
 
-def reassemble_spans(
-    clean: DataFrame, two_phase: bool = True, chunk_size: int = 256
-) -> DataFrame:
-    """(doc_id, pos, span) -> (doc_id, spans) with order restored by pos.
+def reassemble_spans(clean: DataFrame, chunk_size: int = 256) -> DataFrame:
+    """(doc_id, pos, span[, span_error]) -> (doc_id, spans[, n_span_errors])
+    with order restored by pos.
 
-    Two-phase mode bounds per-group aggregation state under mega-document
+    Two phases bound per-group aggregation state under mega-document
     skew: spans first collect per (doc_id, chunk) where chunk = pos div
     ``chunk_size`` — a *contiguous* range, so a normal (< chunk_size spans)
     document pays exactly one group and zero extra structure, while a
@@ -141,7 +138,9 @@ def reassemble_spans(
     the final per-doc merge only orders whole chunks and flattens. This is
     strictly cheaper than hash-salted partials (which shred every doc into
     single-span chunks). collect_list skips null spans, so empty docs come
-    back with an empty array rather than [null].
+    back with an empty array rather than [null]. A ``span_error`` flag
+    (present exactly under a non-raise poison policy) is summed in both
+    phases into the document's ``n_span_errors``.
 
     When the incoming frame already carries a ``_chunk`` column (the
     chunk-aligned salt sanitize_exploded applies since r08), phase 1
@@ -155,38 +154,38 @@ def reassemble_spans(
         F.col("pos").isNotNull(),
         F.struct(F.col("pos").alias("pos"), F.col("span").alias("span")),
     )
-    if two_phase:
-        chunk_key = (
-            F.col("_chunk")
-            if "_chunk" in clean.columns
-            else (F.col("pos").cast("long") / F.lit(chunk_size))
-            .cast("long")
-            .alias("_chunk")
-        )
-        partial = clean.groupBy("doc_id", chunk_key).agg(
-            F.sort_array(F.collect_list(keyed)).alias("chunk_arr")
-        )
-        merged = partial.groupBy("doc_id").agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("_chunk").alias("c"),
-                                F.col("chunk_arr").alias("arr"),
-                            )
+    chunk_key = (
+        F.col("_chunk")
+        if "_chunk" in clean.columns
+        else (F.col("pos").cast("long") / F.lit(chunk_size))
+        .cast("long")
+        .alias("_chunk")
+    )
+    n_err = "span_error" in clean.columns
+    partial = clean.groupBy("doc_id", chunk_key).agg(
+        F.sort_array(F.collect_list(keyed)).alias("chunk_arr"),
+        *([F.sum(F.col("span_error").cast("int")).alias("n_err")] if n_err else []),
+    )
+    merged = partial.groupBy("doc_id").agg(
+        F.flatten(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(
+                            F.col("_chunk").alias("c"),
+                            F.col("chunk_arr").alias("arr"),
                         )
-                    ),
-                    lambda kv: kv["arr"],
-                )
-            ).alias("keyed")
-        )
-    else:
-        merged = clean.groupBy("doc_id").agg(
-            F.array_sort(F.collect_list(keyed)).alias("keyed")
-        )
+                    )
+                ),
+                lambda kv: kv["arr"],
+            )
+        ).alias("keyed"),
+        *([F.sum("n_err").cast("int").alias("n_span_errors")] if n_err else []),
+    )
     return merged.select(
-        "doc_id", F.transform("keyed", lambda kv: kv["span"]).alias("spans")
+        "doc_id",
+        F.transform("keyed", lambda kv: kv["span"]).alias("spans"),
+        *(["n_span_errors"] if n_err else []),
     )
 
 
@@ -218,13 +217,16 @@ def sanitize_spans(
     settings=None,
     explode: bool | str = True,
     salt_buckets: int | str | None = "auto",
-    two_phase: bool = True,
     memoize: int = 0,
     on_error: str = "raise",
     max_spans_hint: int | None = None,
     nested_impl: str = "arrow",
 ) -> DataFrame:
     """End-to-end: sanitize every text-kind span of (doc_id, spans).
+
+    Under a non-raise ``on_error`` the result carries an int
+    ``n_span_errors`` column (poison spans per document) on every plan;
+    under "raise" it is (doc_id, spans) alone.
 
     ``salt_buckets="auto"`` sizes the salted shuffle to 4x the cluster's
     default parallelism — enough granularity that AQE can rebalance and a
@@ -253,10 +255,12 @@ def sanitize_spans(
                                         on_error=on_error)
         udf = make_span_array_udf(settings, memoize=memoize,
                                   on_error=on_error)
-        return df.select("doc_id", udf("spans").alias("spans"))
+        if on_error == "raise":
+            return df.select("doc_id", udf("spans").alias("spans"))
+        return df.select("doc_id", udf("spans").alias("r")).select("doc_id", "r.*")
     clean = sanitize_exploded(explode_spans(df), settings, salt_buckets,
                               memoize=memoize, on_error=on_error)
-    return reassemble_spans(clean, two_phase=two_phase)
+    return reassemble_spans(clean)
 
 
 def extract_spans(
@@ -265,7 +269,6 @@ def extract_spans(
     *,
     max_link_density: float = 0.5,
     salt_buckets: int | str | None = "auto",
-    two_phase: bool = True,
 ) -> DataFrame:
     """Main-content extraction over interleaved (doc_id, spans) documents —
     the north rule's "main-content extraction pipeline" run on the SAME
@@ -308,51 +311,22 @@ def extract_spans(
         *(["_chunk"] if salted else []),
         F.when(F.col("span").isNotNull(), new_span).alias("span"),
     )
-    return reassemble_spans(ex, two_phase=two_phase)
+    return reassemble_spans(ex)
 
 
-def lineage_metrics(clean: DataFrame) -> DataFrame:
-    """Per-partition lineage over the sanitized exploded frame
-    (north_rule: per-partition lineage rows). Cheap second aggregation —
-    run it on the same cached frame as the reassembly."""
-    err_agg = (
-        F.sum(F.col("span_error").cast("int"))
-        if "span_error" in clean.columns
-        else F.lit(0)
-    )
-    return (
-        clean.withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.approx_count_distinct("doc_id").alias("n_docs_approx"),
-            F.sum(
-                F.when(F.col("span.kind") == "text", F.length("span.text")).otherwise(0)
-            ).alias("text_bytes_out"),
-            F.sum(F.when(F.col("span.kind") != "text", 1).otherwise(0)).alias(
-                "n_media_spans"
-            ),
-            err_agg.alias("n_errors"),
-        )
-    )
-
-
-def lineage_metrics_nested(clean: DataFrame) -> DataFrame:
-    """Lineage rollup for the NESTED plan (VERDICT r04 #7): same columns
-    as lineage_metrics, computed from the (doc_id, spans[, n_span_errors])
-    frame ``sanitize_spans_arrow(..., with_errors=True)`` returns — the
-    nested path gets the same quarantine/lineage visibility as the
-    exploded frame's span_error flag. All per-row work is map-side array
+def lineage_metrics(docs: DataFrame) -> DataFrame:
+    """Per-partition lineage rows (n_spans, n_docs_approx, text_bytes_out,
+    n_media_spans, n_errors) over a document-level (doc_id, spans[,
+    n_span_errors]) frame — the output of ``sanitize_spans`` on either
+    plan, or of ``extract_spans``. All per-row work is map-side array
     expressions (aggregate/filter over the spans array); the only shuffle
-    is the per-partition groupBy, identical to lineage_metrics. Null span
-    elements count toward n_spans (as in the exploded frame) but toward
-    neither bytes nor media, and an empty/null spans array counts as ONE
-    span — posexplode_outer keeps a placeholder row for such docs, so the
-    exploded rollup sees it; greatest(size, 1) keeps the parity contract
-    exact on empty docs too (ADVICE r05 #1)."""
-    has_err = "n_span_errors" in clean.columns
+    is the per-partition groupBy. Null span elements count toward n_spans
+    but toward neither bytes nor media, and an empty/null spans array
+    counts as ONE span (the placeholder row posexplode_outer keeps for
+    such docs), so both plans report the same totals (ADVICE r05 #1)."""
+    has_err = "n_span_errors" in docs.columns
     spans = F.coalesce(F.col("spans"), F.array())
-    row = clean.select(
+    row = docs.select(
         "doc_id",
         F.spark_partition_id().alias("part_id"),
         F.greatest(F.size(spans), F.lit(1)).alias("_n_spans"),

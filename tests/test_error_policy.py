@@ -86,7 +86,8 @@ def test_auto_plan_selection(spark):
 
 def test_on_error_flag_visible_in_lineage(spark, poison, doc):
     """Safe modes must not be silent: the poison span carries an explicit
-    span_error flag on the exploded frame and lineage counts it."""
+    span_error flag on the exploded frame, the document its n_span_errors
+    count, and lineage over the sanitize_spans output counts it."""
     from html_sanitizer_spark.pipeline.job import (
         explode_spans,
         lineage_metrics,
@@ -98,19 +99,18 @@ def test_on_error_flag_visible_in_lineage(spark, poison, doc):
     rows = {r["span"]["text"]: r["span_error"] for r in clean.collect()}
     assert rows["<p>BOOM</p>"] is True
     assert all(not v for t, v in rows.items() if t != "<p>BOOM</p>")
-    lineage = lineage_metrics(clean).collect()
+    docs = sanitize_spans(spark, doc, salt_buckets=2, on_error="keep")
+    assert docs.collect()[0]["n_span_errors"] == 1
+    lineage = lineage_metrics(docs).collect()
     assert sum(r["n_errors"] for r in lineage) == 1
 
 
 def test_raise_mode_lineage_has_zero_errors(spark, doc):
-    from html_sanitizer_spark.pipeline.job import (
-        explode_spans,
-        lineage_metrics,
-        sanitize_exploded,
-    )
+    from html_sanitizer_spark.pipeline.job import lineage_metrics
 
-    clean = sanitize_exploded(explode_spans(doc), None, salt_buckets=2)
-    lineage = lineage_metrics(clean).collect()
+    docs = sanitize_spans(spark, doc, salt_buckets=2)
+    assert "n_span_errors" not in docs.columns
+    lineage = lineage_metrics(docs).collect()
     assert sum(r["n_errors"] for r in lineage) == 0
 
 
@@ -153,7 +153,7 @@ def test_nested_pandas_and_arrow_agree(spark):
 
 
 def test_arrow_with_errors_counts_poison_per_doc(spark, poison, doc):
-    """Nested quarantine visibility (VERDICT r03 #8): with_errors=True
+    """Nested quarantine visibility (VERDICT r03 #8): a non-raise policy
     appends a per-document n_span_errors count computed from the list
     offsets — the nested analog of the exploded frame's span_error flag."""
     from html_sanitizer_spark.functions.udfs import sanitize_spans_arrow
@@ -165,17 +165,15 @@ def test_arrow_with_errors_counts_poison_per_doc(spark, poison, doc):
         ]}],
         schema=DOC_SCHEMA,
     )
-    out = sanitize_spans_arrow(doc.union(clean_doc), on_error="keep",
-                               with_errors=True)
+    out = sanitize_spans_arrow(doc.union(clean_doc), on_error="keep")
     rows = {r["doc_id"]: r for r in out.collect()}
     assert rows["d"]["n_span_errors"] == 1
     assert rows["c"]["n_span_errors"] == 0
     assert [s["text"] for s in rows["d"]["spans"]] == [
         "<p>ok</p>", "<p>BOOM</p>"
     ]
-    # with_errors under raise-policy is a contradiction: reject loudly
-    with pytest.raises(ValueError, match="with_errors"):
-        sanitize_spans_arrow(doc, with_errors=True)
+    # under raise a poison span fails the job: no count column at all
+    assert "n_span_errors" not in sanitize_spans_arrow(doc).columns
 
 
 def test_nested_plans_memoize_through_worker_cache(spark):
@@ -262,18 +260,12 @@ def test_edge_span_arrays_agree_across_paths(spark, spans):
 
 def test_lineage_parity_exploded_vs_nested_arrow(spark, poison):
     """VERDICT r04 #7: under on_error='keep' with planted poison
-    fragments, the nested arrow plan's partition rollup
-    (lineage_metrics_nested over with_errors=True output) must agree with
-    the exploded plan's lineage_metrics on every corpus-level total —
-    n_errors above all, plus span/media/byte accounting. Partition
-    boundaries differ by plan, so parity is on the summed rollup."""
-    from html_sanitizer_spark.functions.udfs import sanitize_spans_arrow
-    from html_sanitizer_spark.pipeline.job import (
-        explode_spans,
-        lineage_metrics,
-        lineage_metrics_nested,
-        sanitize_exploded,
-    )
+    fragments, lineage_metrics over the nested arrow plan's output must
+    agree with lineage_metrics over the exploded plan's output on every
+    corpus-level total — n_errors above all, plus span/media/byte
+    accounting. Partition boundaries differ by plan, so parity is on the
+    summed rollup."""
+    from html_sanitizer_spark.pipeline.job import lineage_metrics
 
     docs = spark.createDataFrame(
         [
@@ -305,13 +297,11 @@ def test_lineage_parity_exploded_vs_nested_arrow(spark, poison):
             for k in ("n_spans", "text_bytes_out", "n_media_spans", "n_errors")
         }
 
-    exploded = sanitize_exploded(
-        explode_spans(docs), None, salt_buckets=4, on_error="keep"
-    )
-    nested = sanitize_spans_arrow(docs, None, on_error="keep",
-                                  with_errors=True)
+    exploded = sanitize_spans(spark, docs, explode=True, salt_buckets=4,
+                              on_error="keep")
+    nested = sanitize_spans(spark, docs, explode=False, on_error="keep")
     t_exp = totals(lineage_metrics(exploded))
-    t_nest = totals(lineage_metrics_nested(nested))
+    t_nest = totals(lineage_metrics(nested))
     assert t_exp == t_nest, (t_exp, t_nest)
     assert t_exp["n_errors"] == 2  # both planted BOOMs counted, once each
     assert t_exp["n_media_spans"] == 2

@@ -419,16 +419,22 @@ class TestWorkerMemoKeying:
     one UDF per bucket), different configs never collide, and the store
     itself stays bounded."""
 
-    def test_fingerprint_deterministic_per_config(self):
+    def test_fingerprint_deterministic_per_config(self, monkeypatch):
         from html_sanitizer_spark.configs import settings_for
         from html_sanitizer_spark.engine.settings import Settings
-        from html_sanitizer_spark.functions.udfs import _settings_fingerprint
+        from html_sanitizer_spark.functions import udfs
 
-        a = _settings_fingerprint(Settings({}), 100)
-        b = _settings_fingerprint(Settings({}), 100)  # distinct objects
+        def memo_key(settings, memoize):
+            monkeypatch.setattr(udfs, "_worker_memo", {})
+            udfs._make_text_kernel(settings, memoize, "raise")("<b>x</b>")
+            (key,) = udfs._worker_memo
+            return key
+
+        a = memo_key(Settings({}), 100)
+        b = memo_key(Settings({}), 100)  # distinct objects
         assert a == b
-        assert _settings_fingerprint(Settings({}), 200) != a
-        assert _settings_fingerprint(settings_for("nofollow"), 100) != a
+        assert memo_key(Settings({}), 200) != a
+        assert memo_key(settings_for("nofollow"), 100) != a
 
     def test_worker_store_evicts_single_lru_entry(self):
         """ADVICE r03: overflow evicts exactly ONE entry — the least

@@ -38,7 +38,7 @@ zip_path = sys.argv[1]
 spark = get_spark("multi-exec-golden", executors=2,
                   extra_conf={"spark.submit.pyFiles": zip_path})
 df = golden_spans_df(spark)
-out = sanitize_spans(spark, df, salt_buckets=8, two_phase=True)
+out = sanitize_spans(spark, df, salt_buckets=8)
 rows = {r["doc_id"]: [[s["kind"], s["text"], s["media_ref"], s["offset"]]
                       for s in r["spans"]]
         for r in out.collect()}

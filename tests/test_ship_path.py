@@ -116,29 +116,50 @@ def test_cli_json_and_csv_sources(spark, tmp_path):
     }
 
 
-def test_cli_extract_mode(spark, tmp_path):
-    """r06 --mode extract: the north rule's main-content extraction
-    pipeline reachable from the same spark-submit driver — boilerplate
-    (nav/footer, link-dense blocks) stripped from text spans, media
-    spans untouched, span order preserved."""
+_PAGE = ('<nav><a href=/>Home</a></nav><p>real article body</p>'
+         '<ul><li><a href=/a>aaa</a></li><li><a href=/b>bbb</a></li></ul>'
+         '<footer>c 2026</footer>')
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [[], ["--nested"], ["--mode", "extract"], ["--buckets", "1"]],
+    ids=["exploded", "nested", "extract", "one-bucket"],
+)
+def test_cli_smoke_every_mode(spark, tmp_path, flags):
+    """Every CLI mode writes through the checkpointed path: manifest,
+    lineage and the expected spans. --mode extract is the north rule's
+    main-content extraction pipeline — boilerplate (nav/footer,
+    link-dense blocks) stripped from text spans; media spans untouched
+    and span order preserved in every mode."""
+    from html_sanitizer_spark import sanitize
+    from html_sanitizer_spark.pipeline.checkpoint import read_checkpointed
     from html_sanitizer_spark.pipeline.cli import main
 
     e_in = tmp_path / "ein"
     e_in.mkdir()
-    (e_in / "docs.json").write_text(
-        '{"doc_id": "e1", "spans": ['
-        '{"kind": "text", "text": "<nav><a href=/>Home</a></nav>'
-        '<p>real article body</p>'
-        '<ul><li><a href=/a>aaa</a></li><li><a href=/b>bbb</a></li></ul>'
-        '<footer>c 2026</footer>", "media_ref": "", "offset": 0}, '
-        '{"kind": "image", "text": "", "media_ref": "m://e", "offset": 1}'
-        "]}\n"
-    )
+    (e_in / "docs.json").write_text(json.dumps({"doc_id": "e1", "spans": [
+        {"kind": "text", "text": _PAGE, "media_ref": "", "offset": 0},
+        {"kind": "image", "text": "", "media_ref": "m://e", "offset": 1},
+    ]}) + "\n")
     e_out = str(tmp_path / "eout")
-    assert main(["--input", str(e_in), "--format", "json",
-                 "--output", e_out, "--mode", "extract", "--salt", "2"]) == 0
+    assert main(["--input", str(e_in), "--format", "json", "--output", e_out,
+                 "--buckets", "2", "--salt", "2", *flags]) == 0
+    assert os.path.exists(os.path.join(e_out, "_sanitize_manifest.json"))
+    assert spark.read.parquet(os.path.join(e_out, "_lineage", "bucket=*")).count()
     rows = {r["doc_id"]: r["spans"]
-            for r in spark.read.parquet(e_out).collect()}
-    assert rows["e1"][0]["text"] == "real article body"
+            for r in read_checkpointed(spark, e_out).collect()}
+    want = "real article body" if "extract" in flags else sanitize(_PAGE)
+    assert rows["e1"][0]["text"] == want
     assert rows["e1"][1]["media_ref"] == "m://e"
     assert [s["offset"] for s in rows["e1"]] == [0, 1]
+
+
+def test_cli_extract_rejects_poison_policy(spark, tmp_path):
+    """Extraction has no poison policy: a non-raise --on-error is an
+    error, not silently ignored."""
+    from html_sanitizer_spark.pipeline.cli import main
+
+    with pytest.raises(SystemExit):
+        main(["--input", str(tmp_path), "--output", str(tmp_path / "o"),
+              "--mode", "extract", "--on-error", "keep"])

@@ -13,12 +13,7 @@ from __future__ import annotations
 import pytest
 
 from html_sanitizer_spark.engine.settings import Settings
-from html_sanitizer_spark.pipeline.job import (
-    explode_spans,
-    lineage_metrics,
-    sanitize_exploded,
-    sanitize_spans,
-)
+from html_sanitizer_spark.pipeline.job import lineage_metrics, sanitize_spans
 from html_sanitizer_spark.pipeline.synth import golden_spans_df, synth_spans_df
 
 from .golden_cases import CASES, CONFIGS, expected
@@ -42,7 +37,7 @@ def test_golden_replay_spark(spark, config, explode):
     df = golden_spans_df(spark, config)
     result = sanitize_spans(
         spark, df, settings=Settings(CONFIGS[config]), explode=explode,
-        salt_buckets=8, two_phase=True,
+        salt_buckets=8,
     )
     rows = {r["doc_id"]: r["spans"] for r in result.collect()}
     want = _expected_by_doc(config)
@@ -124,7 +119,7 @@ def test_exploded_and_nested_agree(spark):
 def test_order_preserved_under_salting(spark):
     """Many spans, aggressive salting: order must be exactly restored."""
     df = synth_spans_df(spark, 20, seed=3, mega_every=7).cache()  # incl megadocs
-    out = sanitize_spans(spark, df, explode=True, salt_buckets=16, two_phase=True)
+    out = sanitize_spans(spark, df, explode=True, salt_buckets=16)
     in_rows = {r["doc_id"]: r["spans"] for r in df.collect()}
     out_rows = {r["doc_id"]: r["spans"] for r in out.collect()}
     assert set(in_rows) == set(out_rows)
@@ -165,8 +160,8 @@ def test_empty_and_null_spans(spark):
 
 def test_lineage_metrics(spark):
     df = synth_spans_df(spark, 100, seed=11, mega_every=0)
-    clean = sanitize_exploded(explode_spans(df), salt_buckets=4)
-    m = lineage_metrics(clean).collect()
+    docs = sanitize_spans(spark, df, explode=True, salt_buckets=4)
+    m = lineage_metrics(docs).collect()
     assert sum(r["n_spans"] for r in m) >= 100
     assert all(r["text_bytes_out"] >= 0 for r in m)
 
