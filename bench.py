@@ -29,14 +29,12 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # Headline queries: the flagship pipeline both physical plans + the
 # shuffle/window/join-heavy operators. sanitize_docs_nested measures the
-# mapInArrow nested path (the default); _nested_pandas keeps the pandas
-# span-array UDF measured so the Arrow speedup is visible per round, and
-# _memo measures the per-worker output cache separately (off in the
-# headline runs so they time the engine, not corpus redundancy).
+# mapInArrow nested path, and _memo measures the per-worker output cache
+# separately (off in the headline runs so they time the engine, not corpus
+# redundancy).
 _HEADLINE = [
     "sanitize_docs_exploded",
     "sanitize_docs_nested",
-    "sanitize_docs_nested_pandas",
     "sanitize_docs_exploded_memo",
     "dedup_minhash_pairs",
     "ann_cosine_topk",
@@ -48,8 +46,7 @@ _HEADLINE = [
 ]
 
 
-def _sanitize_workload(spark, sf_dir: str, explode: bool, nested_impl="arrow",
-                       memoize: int = 0):
+def _sanitize_workload(spark, sf_dir: str, explode: bool, memoize: int = 0):
     from html_sanitizer_spark.pipeline.job import sanitize_spans
     from html_sanitizer_spark.queries import spans_from_documents
 
@@ -58,14 +55,13 @@ def _sanitize_workload(spark, sf_dir: str, explode: bool, nested_impl="arrow",
     # the whole output through one task and dominate the measurement)
     return sanitize_spans(
         spark, spans_from_documents(spark, sf_dir), explode=explode,
-        salt_buckets=CPUS, nested_impl=nested_impl, memoize=memoize,
+        salt_buckets=CPUS, memoize=memoize,
     )
 
 
 _SANITIZE_VARIANTS = {
     "sanitize_docs_exploded": dict(explode=True),
-    "sanitize_docs_nested": dict(explode=False, nested_impl="arrow"),
-    "sanitize_docs_nested_pandas": dict(explode=False, nested_impl="pandas"),
+    "sanitize_docs_nested": dict(explode=False),
     "sanitize_docs_exploded_memo": dict(explode=True, memoize=50_000),
 }
 

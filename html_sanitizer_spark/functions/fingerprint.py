@@ -153,9 +153,13 @@ def simhash64_batch(texts: list):
     bits = (
         (nib[:, :, None] >> np.arange(4, dtype=np.uint8)[None, None, :]) & 1
     ).reshape(-1, 64)
+    counts = np.asarray(counts, dtype=np.int64)
     starts = np.zeros(len(counts), dtype=np.int64)
     np.cumsum(counts[:-1], out=starts[1:])
-    votes = np.add.reduceat(2 * bits.astype(np.int64) - 1, starts, axis=0)
+    # +1/-1 votes per bit = 2 * (set bits) - (tokens in the doc); summing
+    # the uint8 bits directly skips a (tokens, 64) int64 intermediate
+    sums = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
+    votes = 2 * sums - counts[:, None]
     sel = (votes > 0).astype(np.uint64)
     sims = (sel << np.arange(64, dtype=np.uint64)[None, :]).sum(
         axis=1, dtype=np.uint64
@@ -163,7 +167,7 @@ def simhash64_batch(texts: list):
     return kept, sims.tolist()
 
 
-def simhash64_py(text: str) -> int:
+def simhash64_py(text: str) -> int | None:
     """Single-document SimHash-64 (test/reference entry point)."""
     _, sims = simhash64_batch([text])
     return sims[0] if sims else None

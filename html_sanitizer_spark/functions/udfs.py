@@ -1,19 +1,20 @@
 """Vectorized sanitize UDFs (the only JVM->Python hop in the pipeline).
 
 Design (SURVEY.md §2.10, §4.1): the whole tree engine is fused into ONE
-scalar pandas UDF so each row crosses the Arrow boundary exactly once.
-Batches arrive as Arrow string arrays; the per-value work (parse, walk,
+Arrow-batched hop per plan so each row crosses the Arrow boundary exactly
+once. Batches arrive as Arrow arrays; the per-value work (parse, walk,
 serialize) runs in a tight loop over the batch, amortizing settings/regex
 setup which lives in module/executor scope. Per-row Python UDFs are never
 used (north_rule requirement).
 
-Two shapes:
-- ``make_sanitize_udf``   — Series[str] -> Series[str], for the exploded
-  span path (scalar pandas_udf; Catalyst sees a deterministic expression).
-- ``make_span_array_udf`` — Series[list[struct]] -> Series[list[struct]],
-  for the nested zero-extra-shuffle path: sanitizes text-kind spans inside
-  the array, passes media spans through byte-identical, preserving order
-  trivially.
+One kernel, one shape per plan: ``_make_text_kernel`` sanitizes a single
+fragment and owns the memo and the poison policy; every UDF below calls it.
+- ``make_sanitize_udf``    — scalar pandas UDF over a text column, for the
+  exploded span plan (Catalyst sees a deterministic expression).
+- ``sanitize_spans_arrow`` — ``mapInArrow`` over whole (doc_id, spans)
+  documents, for the nested zero-extra-shuffle plan: sanitizes text-kind
+  spans inside the array, passes media spans through byte-identical,
+  preserving order trivially.
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ from ..engine.core import sanitize
 
 __all__ = [
     "make_sanitize_udf",
-    "make_span_array_udf",
     "sanitize_spans_arrow",
     "SPAN_TYPE",
     "SPANS_TYPE",
@@ -51,12 +51,6 @@ SAFE_RESULT_TYPE = T.StructType(
     [
         T.StructField("text", T.StringType()),
         T.StructField("err", T.BooleanType()),
-    ]
-)
-SAFE_SPANS_TYPE = T.StructType(
-    [
-        T.StructField("spans", SPANS_TYPE),
-        T.StructField("n_span_errors", T.IntegerType()),
     ]
 )
 
@@ -85,46 +79,16 @@ def make_sanitize_udf(settings=None, memoize: int = 0, on_error: str = "raise"):
       - "null":  null the text with err=true (drops the content, keeps the
         span slot).
     """
-    if on_error not in ("raise", "keep", "null"):
-        raise ValueError(f"on_error must be raise|keep|null, got {on_error!r}")
-    settings_obj = settings_for(settings)
+    kernel = _make_text_kernel(settings, memoize, on_error)
+    safe = on_error != "raise"
 
-    if on_error != "raise":
-        kernel = _make_text_kernel(settings_obj, memoize, on_error)
-
-        @F.pandas_udf(SAFE_RESULT_TYPE)
-        def sanitize_batch_safe(texts: pd.Series) -> pd.DataFrame:
-            outs: list = []
-            errs: list = []
-            for t in texts:
-                if t is None:
-                    outs.append(None)
-                    errs.append(False)
-                    continue
-                o, e = kernel(t)
-                outs.append(o)
-                errs.append(e)
-            return pd.DataFrame({"text": outs, "err": errs})
-
-        return sanitize_batch_safe
-
-    if memoize > 0:
-        kernel = _make_text_kernel(settings_obj, memoize, "raise")
-
-        @F.pandas_udf(T.StringType())
-        def sanitize_batch_memo(texts: pd.Series) -> pd.Series:
-            out = [kernel(t)[0] if t is not None else None for t in texts]
-            return pd.Series(out, dtype="object")
-
-        return sanitize_batch_memo
-
-    @F.pandas_udf(T.StringType())
-    def sanitize_batch(texts: pd.Series) -> pd.Series:
-        # Executor-side: regexes compile lazily once per python worker.
-        out = [
-            sanitize(t, settings_obj) if t is not None else None for t in texts
-        ]
-        return pd.Series(out, dtype="object")
+    @F.pandas_udf(SAFE_RESULT_TYPE if safe else T.StringType())
+    def sanitize_batch(texts: pd.Series) -> pd.Series:  # DataFrame if safe
+        res = [(None, False) if t is None else kernel(t) for t in texts]
+        text = pd.Series([r[0] for r in res], dtype="object")
+        if not safe:
+            return text
+        return pd.DataFrame({"text": text, "err": [r[1] for r in res]})
 
     return sanitize_batch
 
@@ -158,15 +122,18 @@ def _worker_cache(memo_key: tuple) -> dict:
     return cache
 
 
-def _make_text_kernel(settings_obj, memoize: int, on_error: str):
-    """Per-fragment sanitize kernel shared by every UDF shape (exploded
-    scalar, nested pandas, nested arrow): one place implements the memo
-    (per-worker bounded cache keyed by a deterministic config+policy
-    fingerprint, ADVICE r02) and the poison policy (keep/null with an
-    explicit error flag, never a silent pass-through). Returns
+def _make_text_kernel(settings, memoize: int, on_error: str):
+    """Per-fragment sanitize kernel shared by both UDF shapes (exploded
+    scalar, nested arrow): the one place that validates ``on_error`` and
+    implements the memo (per-worker bounded cache keyed by a deterministic
+    config+policy fingerprint, ADVICE r02) and the poison policy (keep/null
+    with an explicit error flag, never a silent pass-through). Returns
     (clean_text, err). Poison results ARE memoized — sanitize is pure, so
     a fragment that raised once raises every time; caching the fallback
     skips re-raising on repeats."""
+    if on_error not in ("raise", "keep", "null"):
+        raise ValueError(f"on_error must be raise|keep|null, got {on_error!r}")
+    settings_obj = settings_for(settings)
     keep = on_error == "keep"
     memo_key = (
         (fingerprint(settings_obj), memoize, on_error) if memoize > 0 else None
@@ -193,80 +160,13 @@ def _make_text_kernel(settings_obj, memoize: int, on_error: str):
     return run
 
 
-def make_span_array_udf(settings=None, memoize: int = 0, on_error: str = "raise"):
-    """Scalar pandas UDF over the whole ``spans`` array column.
-
-    Keeps documents intact (no explode, no reassembly shuffle): for each
-    row, text-kind spans are sanitized in place, media spans pass through
-    untouched, order is preserved by construction. Best plan when the doc
-    size distribution is tame; the exploded+salted path wins under
-    mega-document skew.
-
-    ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8 —
-    the nested plan honors the same knobs instead of rejecting them);
-    keep/null are applied per span inside the array. Non-"raise" modes
-    return struct<spans, n_span_errors> (the per-document poison count),
-    as make_sanitize_udf returns struct<text, err>.
-    """
-    if on_error not in ("raise", "keep", "null"):
-        raise ValueError(f"on_error must be raise|keep|null, got {on_error!r}")
-    settings_obj = settings_for(settings)
-    kernel = _make_text_kernel(settings_obj, memoize, on_error)
-
-    def fix(spans):
-        if spans is None:
-            return None, None
-        out = []
-        n_err = 0
-        for s in spans:
-            if s is None:  # null span element: preserve, don't rebuild
-                out.append(None)
-                continue
-            # Arrow hands array<struct> values to pandas as dicts (or
-            # Rows); normalize access defensively.
-            get = s.get if isinstance(s, dict) else lambda k, _s=s: _s[k]
-            kind = get("kind")
-            text = get("text")
-            if kind == "text" and text is not None:
-                text, err = kernel(text)
-                n_err += err
-            out.append(
-                {
-                    "kind": kind,
-                    "text": text,
-                    "media_ref": get("media_ref"),
-                    "offset": get("offset"),
-                }
-            )
-        return out, n_err
-
-    if on_error != "raise":
-
-        @F.pandas_udf(SAFE_SPANS_TYPE)
-        def sanitize_spans_batch_safe(spans_col: pd.Series) -> pd.DataFrame:
-            fixed = [fix(v) for v in spans_col]
-            return pd.DataFrame({
-                "spans": pd.Series([f[0] for f in fixed], dtype="object"),
-                "n_span_errors": pd.Series([f[1] for f in fixed], dtype="object"),
-            })
-
-        return sanitize_spans_batch_safe
-
-    @F.pandas_udf(SPANS_TYPE)
-    def sanitize_spans_batch(spans_col: pd.Series) -> pd.Series:
-        return pd.Series([fix(v)[0] for v in spans_col], dtype="object")
-
-    return sanitize_spans_batch
-
-
 def sanitize_spans_arrow(
     df, settings=None, memoize: int = 0, on_error: str = "raise",
 ):
     """Nested zero-extra-shuffle path via ``mapInArrow`` (SURVEY.md §2.10):
     operates on pyarrow RecordBatches directly — the flattened struct
     children are rebuilt column-wise (only the ``text`` child is touched),
-    skipping the per-row dict conversion the pandas span-array UDF pays.
-    Same semantics as make_span_array_udf; measurably faster per batch.
+    with no per-row dict conversion.
 
     ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8):
     keep/null are applied per span, and a non-"raise" policy appends an
@@ -276,11 +176,8 @@ def sanitize_spans_arrow(
     """
     import pyarrow as pa
 
-    if on_error not in ("raise", "keep", "null"):
-        raise ValueError(f"on_error must be raise|keep|null, got {on_error!r}")
+    kernel = _make_text_kernel(settings, memoize, on_error)
     with_errors = on_error != "raise"
-    settings_obj = settings_for(settings)
-    kernel = _make_text_kernel(settings_obj, memoize, on_error)
     schema = df.schema
     if with_errors:
         schema = T.StructType(
@@ -309,7 +206,7 @@ def sanitize_spans_arrow(
             # carry the element-level validity through the rebuild: without
             # the mask a null span element would come back as a non-null
             # struct of null fields (ADVICE r02), diverging from the input
-            # and from the pandas/exploded paths
+            # and from the exploded path
             elem_mask = (
                 pa.compute.is_null(values) if values.null_count else None
             )
@@ -377,10 +274,11 @@ EXTRACT_RESULT_TYPE = T.StructType(
 )
 
 
-def make_extract_udf(max_link_density: float = 0.5, separator: str = "\n"):
+def make_extract_udf(max_link_density: float = 0.5):
     """Scalar pandas UDF: main-content extraction (boilerplate strip via
     DOM heuristics — engine/extract.py) over a batch of HTML fragments.
-    Returns struct<main_text, n_kept, n_dropped>; null in, null out.
+    Returns struct<main_text, n_kept, n_dropped> (kept blocks joined by
+    newlines); null in, null out.
     Thresholds are captured in the closure (broadcast-by-closure, same
     pattern as make_sanitize_udf)."""
     from ..engine.extract import extract_main_blocks
@@ -399,7 +297,7 @@ def make_extract_udf(max_link_density: float = 0.5, separator: str = "\n"):
             kept, dropped = extract_main_blocks(
                 h, max_link_density=max_link_density
             )
-            texts.append(separator.join(kept))
+            texts.append("\n".join(kept))
             kept_n.append(len(kept))
             drop_n.append(dropped)
         return pd.DataFrame(

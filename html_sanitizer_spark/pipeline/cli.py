@@ -106,8 +106,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="extract mode: atomic-block link-density keep bar")
     args = ap.parse_args(argv)
     if args.mode == "extract":
-        if args.on_error != "raise":
-            ap.error("--mode extract has no poison policy: drop --on-error")
+        # sanitize-only flags are errors here, not silently ignored
+        for flag in ("config", "on_error", "memoize", "nested"):
+            if getattr(args, flag) != ap.get_default(flag):
+                ap.error(f"--mode extract does not take --{flag.replace('_', '-')}")
         plan = {"max_link_density": args.max_link_density}
     else:
         plan = {"settings": settings_for(args.config),  # fail fast on bad config

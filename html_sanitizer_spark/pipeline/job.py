@@ -5,7 +5,7 @@ Exploded path (default — skew-proof):
     read (doc_id, spans)
       -> posexplode_outer(spans)                  [no shuffle: explode is
                                                    pipelined into the scan]
-      -> repartition by (doc_id, pos div 256)     [SHUFFLE 1 — chunk-salted:
+      -> repartition by (doc_id, pos div _CHUNK)  [SHUFFLE 1 — chunk-salted:
                                                    a mega-doc's chunks spread
                                                    over all buckets, so no
                                                    straggler UDF task; <=256
@@ -23,10 +23,14 @@ Exploded path (default — skew-proof):
                                                    doc; sort restores span
                                                    order by pos]
 
-Nested path (``explode=False``): a single pandas UDF over the whole spans
-array — zero reassembly shuffles, order preserved trivially. Wins when doc
-sizes are tame; loses when one doc has 10^6 spans (whole doc on one core).
-``sanitize_spans`` picks per call; bench.py measures both.
+Nested path (``explode=False``): one ``mapInArrow`` pass over whole
+documents (``sanitize_spans_arrow``) — zero reassembly shuffles, order
+preserved trivially. Wins when doc sizes are tame; loses when one doc has
+10^6 spans (whole doc on one core). ``sanitize_spans`` picks per call;
+bench.py measures both.
+
+``extract_spans`` runs main-content extraction on the exploded topology
+through the same helper, ``_rewrite_text_spans``.
 
 Order contract (north_rule): output spans equal input spans in (kind,
 media_ref, offset, order), with text-kind ``text`` sanitized — verified by
@@ -39,8 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import (
+    make_extract_udf,
     make_sanitize_udf,
-    make_span_array_udf,
     sanitize_spans_arrow,
 )
 
@@ -52,62 +56,55 @@ __all__ = [
     "lineage_metrics",
 ]
 
+# spans per (doc_id, _chunk) group: the salt key of the sanitize stage AND
+# the phase-1 group key of the reassembly — one constant, so the two can
+# never drift apart
+_CHUNK = 256
+
 
 def explode_spans(df: DataFrame) -> DataFrame:
     """(doc_id, spans) -> (doc_id, pos, span); empty docs keep a null row."""
     return df.select("doc_id", F.posexplode_outer("spans").alias("pos", "span"))
 
 
-def sanitize_exploded(
-    exploded: DataFrame, settings=None, salt_buckets: int | None = None,
-    memoize: int = 0, on_error: str = "raise", chunk_size: int = 256,
+def _rewrite_text_spans(
+    exploded: DataFrame, rewrite, salt_buckets: int | None
 ) -> DataFrame:
-    """Apply the sanitize UDF to text-kind spans of an exploded frame.
+    """Shared exploded topology: optional chunk salt, then ``rewrite``
+    applied to the text of text-kind spans, then the span struct rebuilt.
+
+    ``rewrite(text, applies) -> (new_text, extra)`` builds the Python-UDF
+    columns from the span text and the text-kind mask: ``new_text``
+    replaces the text where ``applies``, and the ``extra`` columns are
+    appended to the output row.
 
     ``salt_buckets``: when set, repartitions by (doc_id, _chunk) where
-    ``_chunk = pos div chunk_size`` — a mega-document's chunks spread
-    across tasks before hitting Python (the skew defusal the north_rule
-    requires; per-task state from any one document is bounded by
-    chunk_size spans, the same bound the reassembly's phase-1 group
-    already imposes). r08 change (guide §2.4 — key operations the same
-    way so one exchange CAN be shared): the salt key now equals the
-    reassembly's phase-1 group key. The intended exchange elision does
-    not fire yet — Spark 4.1's EvalPythonExec drops outputPartitioning,
-    so EnsureRequirements re-shuffles above the Arrow UDF regardless
-    (verified with a minimal repro; OPTIMIZATION_r08.md) — but the
-    aligned key measured ~15% on the exploded leg on its own, the gate
-    test_exploded_pipeline_exchange_budget pins the <=3-exchange budget,
-    and if upstream ever preserves partitioning through Python nodes the
-    third exchange disappears with no further change here. The span's
-    own row carries ``pos``, so order needs no co-location; output is
-    span-for-span identical (tier-1 replay + sanitize_structure/span
-    oracles unchanged).
+    ``_chunk = pos div _CHUNK`` — a mega-document's chunks spread across
+    tasks before hitting Python (the skew defusal the north_rule requires;
+    per-task state from any one document is bounded by _CHUNK spans, the
+    same bound the reassembly's phase-1 group already imposes). r08 change
+    (guide §2.4 — key operations the same way so one exchange CAN be
+    shared): the salt key equals the reassembly's phase-1 group key. The
+    intended exchange elision does not fire yet — Spark 4.1's
+    EvalPythonExec drops outputPartitioning, so EnsureRequirements
+    re-shuffles above the Arrow UDF regardless (verified with a minimal
+    repro; OPTIMIZATION_r08.md) — but the aligned key measured ~15% on the
+    exploded leg on its own, the gate test_exploded_pipeline_exchange_budget
+    pins the <=3-exchange budget, and if upstream ever preserves
+    partitioning through Python nodes the third exchange disappears with no
+    further change here. The span's own row carries ``pos``, so order
+    needs no co-location.
     """
-    udf = make_sanitize_udf(settings, memoize=memoize, on_error=on_error)
-    salted = False
-    if salt_buckets:
+    salted = bool(salt_buckets)
+    if salted:
         exploded = exploded.withColumn(
-            "_chunk",
-            (F.col("pos").cast("long") / F.lit(chunk_size)).cast("long"),
+            "_chunk", (F.col("pos").cast("long") / F.lit(_CHUNK)).cast("long"),
         ).repartition(salt_buckets, "doc_id", "_chunk")
-        salted = True
     applies = (F.col("span.kind") == F.lit("text")) & F.col("span.text").isNotNull()
-    if on_error == "raise":
-        clean = F.when(applies, udf(F.col("span.text"))).otherwise(
-            F.col("span.text")
-        )
-        err = []
-    else:
-        # safe modes return struct<text, err>: the poison row is an explicit
-        # span_error flag (summed into the document's n_span_errors by
-        # reassemble_spans), never a silent pass-through
-        res = udf(F.col("span.text"))
-        clean = F.when(applies, res["text"]).otherwise(F.col("span.text"))
-        err = [F.when(applies, F.coalesce(res["err"], F.lit(False)))
-               .otherwise(F.lit(False)).alias("span_error")]
+    new_text, extra = rewrite(F.col("span.text"), applies)
     new_span = F.struct(
         F.col("span.kind").alias("kind"),
-        clean.alias("text"),
+        F.when(applies, new_text).otherwise(F.col("span.text")).alias("text"),
         F.col("span.media_ref").alias("media_ref"),
         F.col("span.offset").alias("offset"),
     )
@@ -120,19 +117,43 @@ def sanitize_exploded(
         # null-span guard covers both the posexplode_outer empty-doc row
         # (pos null too) and a null ELEMENT inside a spans array (pos set):
         # either stays null instead of being rebuilt as a struct of null
-        # fields, matching the arrow/pandas nested paths (ADVICE r02)
+        # fields, matching the nested arrow path (ADVICE r02)
         F.when(F.col("span").isNotNull(), new_span).alias("span"),
-        *err,
+        *extra,
     )
 
 
-def reassemble_spans(clean: DataFrame, chunk_size: int = 256) -> DataFrame:
+def sanitize_exploded(
+    exploded: DataFrame, settings=None, salt_buckets: int | None = None,
+    memoize: int = 0, on_error: str = "raise",
+) -> DataFrame:
+    """Apply the sanitize UDF to text-kind spans of an exploded frame,
+    salted by (doc_id, _chunk) when ``salt_buckets`` is set (see
+    _rewrite_text_spans). Output is (doc_id, pos[, _chunk], span), plus a
+    ``span_error`` flag under a non-raise ``on_error`` (summed into the
+    document's n_span_errors by reassemble_spans): safe modes return
+    struct<text, err>, so the poison row is explicit, never a silent
+    pass-through. Span-for-span identical to the nested plan (tier-1
+    replay + sanitize_structure/span oracles)."""
+    udf = make_sanitize_udf(settings, memoize=memoize, on_error=on_error)
+
+    def rewrite(text, applies):
+        res = udf(text)
+        if on_error == "raise":
+            return res, []
+        err = F.when(applies, F.coalesce(res["err"], F.lit(False)))
+        return res["text"], [err.otherwise(F.lit(False)).alias("span_error")]
+
+    return _rewrite_text_spans(exploded, rewrite, salt_buckets)
+
+
+def reassemble_spans(clean: DataFrame) -> DataFrame:
     """(doc_id, pos, span[, span_error]) -> (doc_id, spans[, n_span_errors])
     with order restored by pos.
 
     Two phases bound per-group aggregation state under mega-document
     skew: spans first collect per (doc_id, chunk) where chunk = pos div
-    ``chunk_size`` — a *contiguous* range, so a normal (< chunk_size spans)
+    ``_CHUNK`` — a *contiguous* range, so a normal (< _CHUNK spans)
     document pays exactly one group and zero extra structure, while a
     mega-document's chunks spread over the cluster and arrive pre-sorted;
     the final per-doc merge only orders whole chunks and flattens. This is
@@ -143,10 +164,10 @@ def reassemble_spans(clean: DataFrame, chunk_size: int = 256) -> DataFrame:
     phases into the document's ``n_span_errors``.
 
     When the incoming frame already carries a ``_chunk`` column (the
-    chunk-aligned salt sanitize_exploded applies since r08), phase 1
+    chunk-aligned salt _rewrite_text_spans applies since r08), phase 1
     groups on that exact attribute — the same key the salt exchange
     partitioned by. (The phase-1 exchange is not elided yet: Spark 4.1's
-    EvalPythonExec drops outputPartitioning, see sanitize_exploded; the
+    EvalPythonExec drops outputPartitioning, see _rewrite_text_spans; the
     alignment still avoids any FOURTH shuffle and makes the elision
     automatic if that upstream limitation lifts.)
     """
@@ -157,7 +178,7 @@ def reassemble_spans(clean: DataFrame, chunk_size: int = 256) -> DataFrame:
     chunk_key = (
         F.col("_chunk")
         if "_chunk" in clean.columns
-        else (F.col("pos").cast("long") / F.lit(chunk_size))
+        else (F.col("pos").cast("long") / F.lit(_CHUNK))
         .cast("long")
         .alias("_chunk")
     )
@@ -220,7 +241,6 @@ def sanitize_spans(
     memoize: int = 0,
     on_error: str = "raise",
     max_spans_hint: int | None = None,
-    nested_impl: str = "arrow",
 ) -> DataFrame:
     """End-to-end: sanitize every text-kind span of (doc_id, spans).
 
@@ -236,8 +256,7 @@ def sanitize_spans(
     corpora (see make_sanitize_udf).
     ``max_spans_hint``: known max span count per doc (table statistics /
     previous lineage); lets ``explode="auto"`` skip even the bounded probe.
-    ``nested_impl``: "arrow" (mapInArrow, column-wise batch rebuild) or
-    "pandas" (span-array pandas UDF) for the non-exploded plan."""
+    The nested plan (``explode=False``) is ``sanitize_spans_arrow``."""
     if salt_buckets == "auto":
         salt_buckets = spark.sparkContext.defaultParallelism * 4
     if explode == "auto":
@@ -250,14 +269,8 @@ def sanitize_spans(
             max_spans_hint = _probe_max_spans(df)
         explode = max_spans_hint > _AUTO_EXPLODE_THRESHOLD
     if not explode:
-        if nested_impl == "arrow":
-            return sanitize_spans_arrow(df, settings, memoize=memoize,
-                                        on_error=on_error)
-        udf = make_span_array_udf(settings, memoize=memoize,
-                                  on_error=on_error)
-        if on_error == "raise":
-            return df.select("doc_id", udf("spans").alias("spans"))
-        return df.select("doc_id", udf("spans").alias("r")).select("doc_id", "r.*")
+        return sanitize_spans_arrow(df, settings, memoize=memoize,
+                                    on_error=on_error)
     clean = sanitize_exploded(explode_spans(df), settings, salt_buckets,
                               memoize=memoize, on_error=on_error)
     return reassemble_spans(clean)
@@ -272,46 +285,21 @@ def extract_spans(
 ) -> DataFrame:
     """Main-content extraction over interleaved (doc_id, spans) documents —
     the north rule's "main-content extraction pipeline" run on the SAME
-    topology as the sanitize flagship: explode -> salted shuffle on
-    (doc_id, pos) -> ONE Arrow-batched Python hop (engine/extract.py:
-    boilerplate kill list + atomic-block link density) applied to
-    text-kind spans only -> two-phase chunked reassembly. Media-kind
+    topology as the sanitize flagship (``_rewrite_text_spans``): explode
+    -> chunk-salted shuffle on (doc_id, _chunk) -> ONE Arrow-batched
+    Python hop (engine/extract.py: boilerplate kill list + atomic-block
+    link density) applied to text-kind spans only -> two-phase chunked
+    reassembly. Media-kind
     spans pass through byte-identical and in position; the span order
     contract is sanitize_spans' exactly (kind, media_ref, offset, order
     preserved; text replaced by the extracted main content)."""
-    from ..functions.udfs import make_extract_udf
-
     if salt_buckets == "auto":
         salt_buckets = spark.sparkContext.defaultParallelism * 4
-    exploded = explode_spans(df)
-    salted = False
-    if salt_buckets:
-        # chunk-aligned salt (r08): same key the reassembly groups on —
-        # see sanitize_exploded for why/limits
-        exploded = exploded.withColumn(
-            "_chunk", (F.col("pos").cast("long") / F.lit(256)).cast("long")
-        ).repartition(salt_buckets, "doc_id", "_chunk")
-        salted = True
     udf = make_extract_udf(max_link_density=max_link_density)
-    applies = (F.col("span.kind") == F.lit("text")) & F.col(
-        "span.text"
-    ).isNotNull()
-    new_text = F.when(
-        applies, udf(F.col("span.text"))["main_text"]
-    ).otherwise(F.col("span.text"))
-    new_span = F.struct(
-        F.col("span.kind").alias("kind"),
-        new_text.alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
-    ex = exploded.select(
-        "doc_id",
-        "pos",
-        *(["_chunk"] if salted else []),
-        F.when(F.col("span").isNotNull(), new_span).alias("span"),
-    )
-    return reassemble_spans(ex)
+    return reassemble_spans(_rewrite_text_spans(
+        explode_spans(df), lambda text, _: (udf(text)["main_text"], []),
+        salt_buckets,
+    ))
 
 
 def lineage_metrics(docs: DataFrame) -> DataFrame:

@@ -37,10 +37,9 @@ def doc(spark):
 
 _PLANS = [
     {"explode": True, "salt_buckets": 2},
-    {"explode": False, "nested_impl": "arrow"},
-    {"explode": False, "nested_impl": "pandas"},
+    {"explode": False},
 ]
-_PLAN_IDS = ["exploded", "nested-arrow", "nested-pandas"]
+_PLAN_IDS = ["exploded", "nested-arrow"]
 
 
 @pytest.mark.parametrize("plan", _PLANS, ids=_PLAN_IDS)
@@ -140,15 +139,15 @@ def test_auto_probe_is_bounded(spark):
         job_mod._probe_max_spans = orig
 
 
-def test_nested_pandas_and_arrow_agree(spark):
+def test_nested_arrow_and_exploded_agree(spark):
     from html_sanitizer_spark.pipeline.job import sanitize_spans as ss
 
     df = synth_spans_df(spark, 80, seed=11, mega_every=0).cache()
-    a = ss(spark, df, explode=False, nested_impl="arrow")
-    p = ss(spark, df, explode=False, nested_impl="pandas")
+    a = ss(spark, df, explode=False)
+    e = ss(spark, df, explode=True, salt_buckets=4)
     rows_a = {r["doc_id"]: r["spans"] for r in a.collect()}
-    rows_p = {r["doc_id"]: r["spans"] for r in p.collect()}
-    assert rows_a == rows_p
+    rows_e = {r["doc_id"]: r["spans"] for r in e.collect()}
+    assert rows_a == rows_e
     df.unpersist()
 
 
@@ -177,8 +176,8 @@ def test_arrow_with_errors_counts_poison_per_doc(spark, poison, doc):
 
 
 def test_nested_plans_memoize_through_worker_cache(spark):
-    """memoize on the nested plans routes through the shared bounded
-    worker cache (same fingerprint machinery as the exploded path)."""
+    """memoize on the nested and exploded plans routes through the one
+    shared bounded worker cache (same fingerprint machinery)."""
     df = spark.createDataFrame(
         [{"doc_id": str(i), "spans": [
             {"kind": "text", "text": "<b>same</b>", "media_ref": "",
@@ -186,8 +185,8 @@ def test_nested_plans_memoize_through_worker_cache(spark):
         ]} for i in range(12)],
         schema=DOC_SCHEMA,
     )
-    for kwargs in ({"nested_impl": "arrow"}, {"nested_impl": "pandas"}):
-        out = sanitize_spans(spark, df, explode=False, memoize=64, **kwargs)
+    for kwargs in ({"explode": False}, {"explode": True, "salt_buckets": 2}):
+        out = sanitize_spans(spark, df, memoize=64, **kwargs)
         texts = {r["spans"][0]["text"] for r in out.collect()}
         assert texts == {"<strong>same</strong>"}
 
@@ -203,12 +202,9 @@ def test_auto_plan_with_knobs_honors_policy(spark, poison, doc):
 
 def test_null_span_element_preserved_on_all_paths(spark):
     """A null element inside a spans array must come back null — not a
-    struct of null fields — on the arrow, pandas, and exploded paths alike
+    struct of null fields — on the arrow and exploded paths alike
     (ADVICE r02)."""
-    from html_sanitizer_spark.functions.udfs import (
-        make_span_array_udf,
-        sanitize_spans_arrow,
-    )
+    from html_sanitizer_spark.functions.udfs import sanitize_spans_arrow
 
     df = spark.createDataFrame(
         [{"doc_id": "d", "spans": [
@@ -224,8 +220,6 @@ def test_null_span_element_preserved_on_all_paths(spark):
         return [None if s is None else tuple(s) for s in row]
 
     assert spans_of(sanitize_spans_arrow(df)) == expected
-    udf = make_span_array_udf()
-    assert spans_of(df.select("doc_id", udf("spans").alias("spans"))) == expected
     assert spans_of(sanitize_spans(spark, df, explode=True,
                                    salt_buckets=2)) == expected
 
@@ -237,12 +231,9 @@ def test_null_span_element_preserved_on_all_paths(spark):
     [{"kind": "image", "text": "cap", "media_ref": "m://x", "offset": 0}],
 ], ids=["empty-array", "null-text", "empty-text", "media-only"])
 def test_edge_span_arrays_agree_across_paths(spark, spans):
-    """Arrow, pandas, and exploded paths must agree on degenerate span
-    arrays (null/empty text, media-only, empty docs)."""
-    from html_sanitizer_spark.functions.udfs import (
-        make_span_array_udf,
-        sanitize_spans_arrow,
-    )
+    """Arrow and exploded paths must agree on degenerate span arrays
+    (null/empty text, media-only, empty docs)."""
+    from html_sanitizer_spark.functions.udfs import sanitize_spans_arrow
 
     df = spark.createDataFrame([{"doc_id": "d", "spans": spans}],
                                schema=DOC_SCHEMA)
@@ -251,11 +242,10 @@ def test_edge_span_arrays_agree_across_paths(spark, spans):
         return [tuple(s) for s in out.collect()[0]["spans"]]
 
     arrow = spans_of(sanitize_spans_arrow(df))
-    udf = make_span_array_udf()
-    pandas_ = spans_of(df.select("doc_id", udf("spans").alias("spans")))
     exploded = spans_of(sanitize_spans(spark, df, explode=True,
                                        salt_buckets=2))
-    assert arrow == pandas_ == exploded
+    # nothing here has markup to rewrite: every path returns the input
+    assert arrow == exploded == [tuple(s.values()) for s in spans]
 
 
 def test_lineage_parity_exploded_vs_nested_arrow(spark, poison):

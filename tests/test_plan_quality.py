@@ -5,6 +5,7 @@ whole-stage codegen on the JVM-side operators."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from html_sanitizer_spark.pipeline.job import explode_spans, sanitize_exploded
@@ -101,7 +102,8 @@ def test_salted_exchange_feeds_python_stage(spark):
     assert "hashpartitioning(doc_id" in plan and "_chunk" in plan, plan
 
 
-def test_exploded_pipeline_exchange_budget(spark):
+@pytest.mark.parametrize("plan", ["sanitize_spans", "extract_spans"])
+def test_exploded_pipeline_exchange_budget(spark, plan):
     """r08 exchange-budget gate (guide §2.4): the full exploded pipeline
     is exactly THREE hash exchanges — chunk salt, phase-1 (doc_id, _chunk)
     collect, per-doc merge — and the salt keys EQUAL the phase-1 group
@@ -110,11 +112,15 @@ def test_exploded_pipeline_exchange_budget(spark):
     cannot be elided while the Arrow UDF sits between salt and reassembly;
     if that ever changes upstream, this count drops to 2 for free because
     the keys already line up. A 4th exchange appearing means a regression
-    (e.g. someone re-keyed the salt away from the reassembly chunks)."""
-    from html_sanitizer_spark.pipeline.job import sanitize_spans
+    (e.g. someone re-keyed the salt away from the reassembly chunks).
+    extract_spans runs on the same topology and shares the budget."""
+    from html_sanitizer_spark.pipeline import job
 
-    out = sanitize_spans(spark, spans_from_documents(spark, SF),
-                         explode=True, salt_buckets=16)
+    df = spans_from_documents(spark, SF)
+    if plan == "sanitize_spans":
+        out = job.sanitize_spans(spark, df, explode=True, salt_buckets=16)
+    else:
+        out = job.extract_spans(spark, df, salt_buckets=16)
     plan = _plan(out)
     assert plan.count("Exchange hashpartitioning") <= 3, plan
     # the salt exchange and the phase-1 aggregate share the same key pair

@@ -155,11 +155,15 @@ def test_cli_smoke_every_mode(spark, tmp_path, flags):
     assert [s["offset"] for s in rows["e1"]] == [0, 1]
 
 
-def test_cli_extract_rejects_poison_policy(spark, tmp_path):
-    """Extraction has no poison policy: a non-raise --on-error is an
-    error, not silently ignored."""
+@pytest.mark.parametrize("flag", [
+    ["--on-error", "keep"], ["--config", "nofollow"], ["--memoize", "64"],
+    ["--nested"],
+], ids=["on-error", "config", "memoize", "nested"])
+def test_cli_extract_rejects_poison_policy(spark, tmp_path, flag):
+    """Extraction has no poison policy, config, memo or nested plan: each
+    sanitize-only flag is an error, not silently ignored."""
     from html_sanitizer_spark.pipeline.cli import main
 
     with pytest.raises(SystemExit):
         main(["--input", str(tmp_path), "--output", str(tmp_path / "o"),
-              "--mode", "extract", "--on-error", "keep"])
+              "--mode", "extract", *flag])
