@@ -52,7 +52,7 @@ _P_CLOSERS = frozenset(
 )
 
 # tag -> set of start tags that implicitly close it
-_AUTO_CLOSE = {
+_CLOSED_BY = {
     "p": _P_CLOSERS,
     "li": frozenset({"li"}),
     "a": frozenset({"a"}),
@@ -99,7 +99,7 @@ _SCOPE_BARRIER = {
 _NO_BARRIER: frozenset = frozenset()
 # Start tags that can imply ANY close — everything else (b, em, span, ...)
 # skips the stack scan entirely (hot path: most opens close nothing).
-_CAN_CLOSE = frozenset().union(*_AUTO_CLOSE.values())
+_CAN_CLOSE = frozenset().union(*_CLOSED_BY.values())
 
 _ENTITY_RE = re.compile(r"&(?:#(?P<dec>[0-9]+)|#[xX](?P<hex>[0-9a-fA-F]+)|(?P<name>[a-zA-Z][a-zA-Z0-9]*));")
 
@@ -170,7 +170,7 @@ class _TreeBuilder:
                 crossed: set = set()
                 for i in range(len(self.stack) - 1, 0, -1):
                     tag = self.stack[i].tag
-                    if name in _AUTO_CLOSE.get(
+                    if name in _CLOSED_BY.get(
                         tag, _NO_BARRIER
                     ) and not crossed & _SCOPE_BARRIER.get(tag, _NO_BARRIER):
                         idx = i

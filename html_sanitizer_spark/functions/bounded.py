@@ -3,11 +3,10 @@
 Several operators legitimately pull a DRIVER-SIDE scalar or tiny row set
 out of a distributed frame — the CC convergence probe (1 aggregate row),
 the BPE top-pair pick (limit 1), the k-means / IVF centroid sets (<= K
-rows), the explode="auto" skew probe (1 aggregate row). Each used to
-promise its bound in a docstring; this helper turns the five promises
-into ONE enforced invariant (VERDICT r06 #4): every such site declares
-its bound at the call, and a result that exceeds it raises instead of
-silently shipping an unbounded payload to the driver.
+rows). Each used to promise its bound in a docstring; this helper turns
+those promises into ONE enforced invariant (VERDICT r06 #4): every such
+site declares its bound at the call, and a result that exceeds it raises
+instead of silently shipping an unbounded payload to the driver.
 
 The bounds here are structural (limits, aggregates, K-row group-bys over
 a K-value domain), so the raise is a tripwire for future edits that

@@ -55,7 +55,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..configs import fingerprint
-from .iceberg_lite import IcebergLiteTable
 from .job import extract_spans, lineage_metrics, sanitize_spans
 
 __all__ = ["CheckpointedRun", "run_checkpointed"]
@@ -174,8 +173,6 @@ def run_checkpointed(
     out_dir: str,
     n_buckets: int = 8,
     mode: str = "sanitize",
-    table_format: str = "dirs",
-    fail_after_bucket: int | None = None,
     **plan,
 ) -> CheckpointedRun:
     """Run ``mode``'s document-level plan over ``df`` into ``out_dir``
@@ -185,12 +182,8 @@ def run_checkpointed(
     or ``extract_spans`` (mode "extract"). A non-raise ``on_error`` adds
     ``out_dir/_quarantine/bucket=<k>``: the documents with
     ``n_span_errors > 0``; lineage carries per-partition n_errors either way.
-    ``table_format``: "dirs" writes one overwritable parquet dir per bucket;
-    "iceberg-lite" appends each bucket as a snapshot of an
-    :class:`IcebergLiteTable` (production: a real Iceberg append), keeping
-    the resume manifest as the source of truth for which buckets committed.
-    ``fail_after_bucket`` is a test hook: raise after committing that many
-    buckets to simulate a mid-run crash.
+    Each bucket is written (overwrite) to ``out_dir/bucket=<k>`` and then
+    committed to the manifest.
     """
     plan_fn = _PLANS[mode]
     key = [fingerprint(plan.get("settings")), mode]
@@ -199,13 +192,11 @@ def run_checkpointed(
     fp = hashlib.sha256(json.dumps(key).encode()).hexdigest()[:16]
     run = CheckpointedRun.load_or_create(out_dir, n_buckets, fp,
                                          plan.get("on_error", "raise"))
-    table = (IcebergLiteTable(os.path.join(out_dir, "table"))
-             if table_format == "iceberg-lite" else None)
 
     todo = [b for b in range(n_buckets) if b not in run.done]
     staging = (_stage_bucketed(df, out_dir, n_buckets, fp)
                if todo and n_buckets > 1 else None)
-    for k, bucket in enumerate(todo):
+    for bucket in todo:
         if staging is None:
             part = df
         elif os.path.exists(os.path.join(staging, f"bucket={bucket}")):
@@ -217,22 +208,9 @@ def run_checkpointed(
             # output dir so read_checkpointed's bucket=* glob stays uniform
             part = spark.createDataFrame([], df.schema)
         docs = _persist_coalesced(spark, plan_fn(spark, part, **plan))
-        data = docs.drop("n_span_errors")
-        if table is not None:
-            # idempotence on crash-between-commit-points: if a prior attempt
-            # already snapshotted this bucket (table commit landed, resume
-            # manifest didn't), skip the append rather than duplicating rows
-            already = any(
-                s.get("summary", {}).get("bucket") == bucket
-                and s.get("summary", {}).get("config") == fp
-                for s in table.snapshots()
-            )
-            if not already:
-                table.append(data, summary={"bucket": bucket, "config": fp})
-        else:
-            data.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"bucket={bucket}")
-            )
+        docs.drop("n_span_errors").write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"bucket={bucket}")
+        )
         if "n_span_errors" in docs.columns:
             docs.filter(F.col("n_span_errors") > 0).write.mode(
                 "overwrite"
@@ -242,8 +220,6 @@ def run_checkpointed(
         ).parquet(os.path.join(out_dir, "_lineage", f"bucket={bucket}"))
         docs.unpersist()
         run.commit_bucket(bucket)
-        if fail_after_bucket is not None and k + 1 >= fail_after_bucket:
-            raise RuntimeError(f"injected failure after bucket {bucket}")
     if staging is not None and len(run.done) == n_buckets:
         # every bucket committed: the staged copy is dead weight, drop it
         # (an Iceberg bucket partition spec has no copy to drop)
@@ -251,9 +227,5 @@ def run_checkpointed(
     return run
 
 
-def read_checkpointed(
-    spark: SparkSession, out_dir: str, table_format: str = "dirs"
-) -> DataFrame:
-    if table_format == "iceberg-lite":
-        return IcebergLiteTable(os.path.join(out_dir, "table")).read(spark)
+def read_checkpointed(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, "bucket=*"))

@@ -105,6 +105,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--max-link-density", type=float, default=0.5,
                     help="extract mode: atomic-block link-density keep bar")
     args = ap.parse_args(argv)
+    if args.buckets < 1:
+        ap.error("--buckets must be at least 1")
     if args.mode == "extract":
         # sanitize-only flags are errors here, not silently ignored
         for flag in ("config", "on_error", "memoize", "nested"):

@@ -26,8 +26,9 @@ Exploded path (default — skew-proof):
 Nested path (``explode=False``): one ``mapInArrow`` pass over whole
 documents (``sanitize_spans_arrow``) — zero reassembly shuffles, order
 preserved trivially. Wins when doc sizes are tame; loses when one doc has
-10^6 spans (whole doc on one core). ``sanitize_spans`` picks per call;
-bench.py measures both.
+10^6 spans (whole doc on one core). The caller picks the plan with
+``sanitize_spans(explode=)`` (the CLI's ``--nested``); bench.py and
+perfbench measure both.
 
 ``extract_spans`` runs main-content extraction on the exploded topology
 through the same helper, ``_rewrite_text_spans``.
@@ -210,37 +211,14 @@ def reassemble_spans(clean: DataFrame) -> DataFrame:
     )
 
 
-_AUTO_PROBE_ROWS = 4096
-_AUTO_EXPLODE_THRESHOLD = 512
-
-
-def _probe_max_spans(df: DataFrame, n_rows: int = _AUTO_PROBE_ROWS) -> int:
-    """Bounded skew probe for ``explode="auto"``: max span count over the
-    first ``n_rows`` documents (a GlobalLimit — the scan stops after
-    n_rows, never a full pass; VERDICT r01 #7). At 100 TB prefer passing
-    ``max_spans_hint`` from table statistics or the previous run's lineage
-    rollup instead of probing at all."""
-    from ..functions.bounded import bounded_collect
-
-    row = bounded_collect(
-        df.select(F.size("spans").alias("n"))
-        .limit(n_rows)
-        .agg(F.max("n").alias("m")),
-        1,
-        "explode-auto skew probe",
-    )
-    return row[0]["m"] or 0
-
-
 def sanitize_spans(
     spark: SparkSession,
     df: DataFrame,
     settings=None,
-    explode: bool | str = True,
+    explode: bool = True,
     salt_buckets: int | str | None = "auto",
     memoize: int = 0,
     on_error: str = "raise",
-    max_spans_hint: int | None = None,
 ) -> DataFrame:
     """End-to-end: sanitize every text-kind span of (doc_id, spans).
 
@@ -254,20 +232,11 @@ def sanitize_spans(
     tasks. Pass an int to pin it, or None to skip salting entirely.
     ``memoize``: per-worker output cache size for boilerplate-heavy
     corpora (see make_sanitize_udf).
-    ``max_spans_hint``: known max span count per doc (table statistics /
-    previous lineage); lets ``explode="auto"`` skip even the bounded probe.
-    The nested plan (``explode=False``) is ``sanitize_spans_arrow``."""
+    ``explode=True`` runs the exploded, chunk-salted plan that spreads a
+    mega-document over tasks; ``explode=False`` runs the nested plan,
+    ``sanitize_spans_arrow``. Both agree span for span."""
     if salt_buckets == "auto":
         salt_buckets = spark.sparkContext.defaultParallelism * 4
-    if explode == "auto":
-        # pick the physical plan by measured skew: if any document's span
-        # count could monopolize a task, use the exploded+salted plan;
-        # otherwise the nested single-UDF plan (no reassembly shuffles)
-        # wins. on_error/memoize are honored on BOTH plans (VERDICT r03
-        # #8), so the knobs no longer force the choice.
-        if max_spans_hint is None:
-            max_spans_hint = _probe_max_spans(df)
-        explode = max_spans_hint > _AUTO_EXPLODE_THRESHOLD
     if not explode:
         return sanitize_spans_arrow(df, settings, memoize=memoize,
                                     on_error=on_error)

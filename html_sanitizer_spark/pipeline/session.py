@@ -57,13 +57,10 @@ def get_spark(
         # Arrow<->pandas hop — measured 2.5x on the exploded sanitize leg
         # vs the old 2048 — while maxBytesPerBatch (Spark 4) is the DIRECT
         # memory guard the small record cap used to approximate: a batch
-        # of mega-spans is cut off by bytes long before 10k records. Both
-        # env-overridable for corpora with different row-size profiles.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"))
+        # of mega-spans is cut off by bytes long before 10k records.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH_BYTES",
-                               str(32 * 1024 * 1024)))
+                str(32 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

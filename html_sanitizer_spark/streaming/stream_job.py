@@ -38,7 +38,6 @@ __all__ = [
     "stream_dedup_exact",
     "stream_dedup_incremental",
     "stream_ingest_pipeline",
-    "start_stream",
     "write_epoch",
     "read_stream_output",
     "EVENT_SCHEMA",
@@ -424,7 +423,3 @@ def stream_ingest_pipeline(
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def start_stream(*args, **kwargs) -> StreamingQuery:  # convenience alias
-    return stream_sanitize_parquet_dir(*args, **kwargs)

@@ -46,6 +46,23 @@ def poison_df(spark, monkeypatch):
     return spark.createDataFrame(docs, schema=DOC_SCHEMA)
 
 
+def _crash_after_commits(monkeypatch, n, next_bucket_written=False):
+    """Make the run crash with ``n`` buckets committed to the manifest:
+    right after the n-th commit, or, with ``next_bucket_written``, in the
+    next bucket's commit after its data has landed (a crash between the
+    two commit points)."""
+    orig_commit = CheckpointedRun.commit_bucket
+
+    def commit(self, bucket):
+        if next_bucket_written and len(self.done) == n:
+            raise RuntimeError("injected failure in manifest commit")
+        orig_commit(self, bucket)
+        if not next_bucket_written and len(self.done) == n:
+            raise RuntimeError(f"injected failure after bucket {bucket}")
+
+    monkeypatch.setattr(CheckpointedRun, "commit_bucket", commit)
+
+
 def _collect_sorted(df):
     return sorted(
         ((r["doc_id"], [tuple(s) for s in r["spans"]]) for r in df.collect()),
@@ -60,8 +77,10 @@ def test_resume_after_crash(spark, tmp_path, monkeypatch):
     want = _collect_sorted(read_checkpointed(spark, full_dir))
 
     crash_dir = str(tmp_path / "crash")
+    _crash_after_commits(monkeypatch, 2)
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_checkpointed(spark, df, crash_dir, n_buckets=4, fail_after_bucket=2)
+        run_checkpointed(spark, df, crash_dir, n_buckets=4)
+    monkeypatch.undo()
     manifest = json.load(open(os.path.join(crash_dir, MANIFEST_NAME)))
     assert len(manifest["done"]) == 2
 
@@ -73,25 +92,17 @@ def test_resume_after_crash(spark, tmp_path, monkeypatch):
 
     # crash BETWEEN the commit points: the third bucket's data write
     # lands, then its manifest commit raises; the resume redoes it
-    orig_commit = CheckpointedRun.commit_bucket
-
-    def commit(self, bucket):
-        if len(self.done) == 2:
-            raise RuntimeError("injected failure in manifest commit")
-        orig_commit(self, bucket)
-
-    for fmt in ("dirs", "iceberg-lite"):
-        out = str(tmp_path / f"between-{fmt}")
-        monkeypatch.setattr(CheckpointedRun, "commit_bucket", commit)
-        with pytest.raises(RuntimeError, match="injected failure"):
-            run_checkpointed(spark, df, out, n_buckets=4, table_format=fmt)
-        monkeypatch.undo()
-        manifest = json.load(open(os.path.join(out, MANIFEST_NAME)))
-        assert len(manifest["done"]) == 2
-        run = run_checkpointed(spark, df, out, n_buckets=4, table_format=fmt)
-        assert sorted(run.done) == [0, 1, 2, 3]
-        got = _collect_sorted(read_checkpointed(spark, out, table_format=fmt))
-        assert got == want, fmt
+    out = str(tmp_path / "between")
+    _crash_after_commits(monkeypatch, 2, next_bucket_written=True)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, df, out, n_buckets=4)
+    monkeypatch.undo()
+    manifest = json.load(open(os.path.join(out, MANIFEST_NAME)))
+    assert len(manifest["done"]) == 2
+    run = run_checkpointed(spark, df, out, n_buckets=4)
+    assert sorted(run.done) == [0, 1, 2, 3]
+    got = _collect_sorted(read_checkpointed(spark, out))
+    assert got == want
     df.unpersist()
 
 
@@ -145,14 +156,16 @@ def test_fingerprint_stable_across_hash_seeds():
     assert outs == {str([fingerprint(n) for n in sorted(PIPELINE_CONFIGS)])}
 
 
-def test_staging_partition_pruned_io(spark, tmp_path):
+def test_staging_partition_pruned_io(spark, tmp_path, monkeypatch):
     """The 100TB property: the input is staged ONCE (bucketed write), and
     each per-bucket job reads only its own bucket=<k> files — never a
     rescan of the whole input (a filter on computed xxhash64 can't prune)."""
     df = synth_spans_df(spark, 80, seed=7, mega_every=0)
     out = str(tmp_path / "out")
+    _crash_after_commits(monkeypatch, 1)
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_checkpointed(spark, df, out, n_buckets=4, fail_after_bucket=1)
+        run_checkpointed(spark, df, out, n_buckets=4)
+    monkeypatch.undo()
 
     staging = os.path.join(out, "_staging")
     assert os.path.exists(os.path.join(staging, "_staging_commit.json"))

@@ -156,14 +156,22 @@ def test_cli_smoke_every_mode(spark, tmp_path, flags):
 
 
 @pytest.mark.parametrize("flag", [
-    ["--on-error", "keep"], ["--config", "nofollow"], ["--memoize", "64"],
-    ["--nested"],
-], ids=["on-error", "config", "memoize", "nested"])
+    ["--mode", "extract", "--on-error", "keep"],
+    ["--mode", "extract", "--config", "nofollow"],
+    ["--mode", "extract", "--memoize", "64"],
+    ["--mode", "extract", "--nested"],
+    ["--buckets", "0"], ["--buckets", "-1"],
+], ids=["on-error", "config", "memoize", "nested", "buckets-0", "buckets-neg"])
 def test_cli_extract_rejects_poison_policy(spark, tmp_path, flag):
-    """Extraction has no poison policy, config, memo or nested plan: each
-    sanitize-only flag is an error, not silently ignored."""
+    """Flags the CLI cannot honour are errors, not silently ignored:
+    extraction has no poison policy, config, memo or nested plan, and a
+    run needs at least one bucket (fewer would write no data, lineage or
+    manifest and still exit 0). The input is a real one-document table,
+    so only the flag can make the run fail."""
     from html_sanitizer_spark.pipeline.cli import main
+    from html_sanitizer_spark.pipeline.synth import synth_spans_df
 
+    in_dir = str(tmp_path / "in")
+    synth_spans_df(spark, 1, seed=3, mega_every=0).write.parquet(in_dir)
     with pytest.raises(SystemExit):
-        main(["--input", str(tmp_path), "--output", str(tmp_path / "o"),
-              "--mode", "extract", *flag])
+        main(["--input", in_dir, "--output", str(tmp_path / "o"), *flag])
