@@ -7,17 +7,29 @@ snapshot log. This sandbox has no Iceberg runtime jar, so the same protocol
 runs over plain parquet with an Iceberg-style JSON manifest we own:
 
     out_dir/
-      _sanitize_manifest.json     # atomic (write-tmp + rename) commit record
+      _sanitize_manifest.json     # atomic (write-tmp + rename) commit record;
+                                  # carries each done bucket's lineage
       _staging/bucket=<k>/...     # ONE-pass bucketed copy of the input
       bucket=<k>/part-*.parquet   # one dir per doc_id hash bucket
-      _lineage/bucket=<k>/...     # per-partition lineage rows per bucket
-      _quarantine/bucket=<k>/...  # docs with n_span_errors > 0 (non-raise)
+      _quarantine/bucket=<k>/...  # docs with n_span_errors > 0 (non-raise
+                                  # policy, buckets with errors only)
 
 Protocol:
 - Buckets are plan-agnostic: each runs ONE document-level plan
-  (``sanitize_spans`` exploded or nested, or ``extract_spans``) whose
-  (doc_id, spans[, n_span_errors]) frame is persisted once and feeds the
-  data write (without the count), the quarantine and ``lineage_metrics``.
+  (``sanitize_spans`` exploded or nested, or ``extract_spans``) as ONE
+  Spark job, the data write, with the bucket's lineage
+  (``job.lineage_columns``) observed on that same job — the analog of an
+  Iceberg snapshot summary's write stats. Only a bucket whose job saw
+  poison documents runs a second job, its quarantine write, which reads
+  them back from the bucket's output (their ids and error counts ride
+  the same observation): it runs no UDF.
+- ``_IN_FLIGHT`` buckets run at once, so one bucket's driver-side
+  planning, file commit and tail stages overlap another's UDF stage.
+  The calling thread commits buckets in completion order and starts the
+  next bucket only after a commit. Once a bucket raises, no bucket starts
+  and no commit lands, the running jobs of the bucket still in flight are
+  cancelled (as if the process had died; a job it submits after the
+  cancel still runs, uncommitted), and that first error is re-raised.
 - bucket(doc) = pmod(xxhash64(doc_id), n_buckets) — stable under retries.
 - With more than one bucket the input is staged ONCE with
   ``partitionBy(bucket)``, so each per-bucket job reads only its own
@@ -27,8 +39,8 @@ Protocol:
   ``bucket(n, doc_id)`` in the Iceberg partition spec. A single bucket
   reads the input directly: no copy.
 - A bucket is processed with overwrite semantics (re-running a
-  half-written bucket is safe) and only then recorded in the manifest;
-  the manifest rename is the commit point.
+  half-written bucket is safe) and only then recorded, with its lineage,
+  in the manifest; the manifest rename is the commit point.
 - Resume = skip buckets already in the manifest (the left-anti-join of
   SURVEY.md §2.3 J3, done driver-side on bucket ids since the manifest is
   tiny). Staging carries its own commit marker (same atomic-rename
@@ -38,8 +50,9 @@ Protocol:
   ``configs.fingerprint(settings)`` (hooks hash by code), the mode and,
   in extract mode, ``max_link_density``; the manifest also records the
   on_error policy. Resuming with a different fingerprint, policy or bucket
-  count refuses. The plan (exploded or nested) is left out: both agree
-  span for span.
+  count refuses, and so does resuming into a manifest without lineage
+  (an older layout that kept lineage as a separate parquet table). The
+  plan (exploded or nested) is left out: both agree span for span.
 """
 
 from __future__ import annotations
@@ -49,13 +62,17 @@ import json
 import os
 import shutil
 import tempfile
+import uuid
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
+from itertools import islice
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..configs import fingerprint
-from .job import extract_spans, lineage_metrics, sanitize_spans
+from .job import extract_spans, lineage_columns, sanitize_spans
 
 __all__ = ["CheckpointedRun", "run_checkpointed"]
 
@@ -99,6 +116,8 @@ class CheckpointedRun:
     config_fingerprint: str
     done: list[int] = field(default_factory=list)
     on_error: str = "raise"
+    # str(bucket) -> that bucket's lineage row (job.lineage_columns)
+    lineage: dict[str, dict] = field(default_factory=dict)
 
     @property
     def manifest_path(self) -> str:
@@ -127,23 +146,31 @@ class CheckpointedRun:
                     f"{m.get('on_error', 'raise')!r} != requested {on_error!r}"
                     " (would mix poison-row policies across buckets)"
                 )
+            if "lineage" not in m:
+                raise ValueError(
+                    "Refusing to resume: manifest has no lineage (written by"
+                    " a build that kept lineage in a parquet table; would"
+                    " mix lineage layouts)"
+                )
             return cls(out_dir, n_buckets, fingerprint, list(m["done"]),
-                       on_error)
+                       on_error, m["lineage"])
         os.makedirs(out_dir, exist_ok=True)
         return cls(out_dir, n_buckets, fingerprint, on_error=on_error)
 
     def commit_bucket(self, bucket: int) -> None:
-        """Atomic manifest update AFTER the bucket's data is fully written:
-        write to a temp file in the same directory, then rename (the POSIX
-        atomic commit; on object stores this is an Iceberg snapshot commit
-        instead)."""
+        """Atomic manifest update AFTER the bucket's data is fully written,
+        recording ``self.lineage`` with ``done``: write to a temp file in
+        the same directory, then rename (the POSIX atomic commit; on object
+        stores this is an Iceberg snapshot commit instead)."""
         if bucket not in self.done:
             self.done.append(bucket)
+            self.done.sort()
         payload = {
             "n_buckets": self.n_buckets,
             "config_fingerprint": self.config_fingerprint,
-            "done": sorted(self.done),
+            "done": self.done,
             "on_error": self.on_error,
+            "lineage": self.lineage,
         }
         fd, tmp = tempfile.mkstemp(dir=self.out_dir, prefix="._manifest")
         with os.fdopen(fd, "w") as fh:
@@ -152,19 +179,7 @@ class CheckpointedRun:
 
 
 _PLANS = {"sanitize": sanitize_spans, "extract": extract_spans}
-_CACHE_AQE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-
-
-def _persist_coalesced(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """``persist()`` that keeps AQE's final partition coalescing: Spark
-    plans a cached frame with it off, so each bucket would write one file
-    per shuffle partition. The setting is read when the cache is planned."""
-    prev = spark.conf.get(_CACHE_AQE)
-    spark.conf.set(_CACHE_AQE, "true")
-    try:
-        return df.persist()
-    finally:
-        spark.conf.set(_CACHE_AQE, prev)
+_IN_FLIGHT = 2  # buckets running at once
 
 
 def run_checkpointed(
@@ -176,14 +191,19 @@ def run_checkpointed(
     **plan,
 ) -> CheckpointedRun:
     """Run ``mode``'s document-level plan over ``df`` into ``out_dir``
-    bucket-by-bucket with resume.
+    bucket-by-bucket with resume, ``_IN_FLIGHT`` buckets at a time.
 
     ``plan`` keywords go unchanged to ``sanitize_spans`` (mode "sanitize")
-    or ``extract_spans`` (mode "extract"). A non-raise ``on_error`` adds
-    ``out_dir/_quarantine/bucket=<k>``: the documents with
-    ``n_span_errors > 0``; lineage carries per-partition n_errors either way.
-    Each bucket is written (overwrite) to ``out_dir/bucket=<k>`` and then
-    committed to the manifest.
+    or ``extract_spans`` (mode "extract"). Each bucket is one Spark job:
+    the write (overwrite) of ``out_dir/bucket=<k>``, observing the
+    bucket's lineage, which the manifest commit then records as
+    ``run.lineage[str(k)]``. Under a non-raise ``on_error`` a bucket whose
+    lineage counts errors adds ``out_dir/_quarantine/bucket=<k>``: the
+    documents with ``n_span_errors > 0``. The write's observation also
+    collects those documents' ``(doc_id, n_span_errors)`` to the driver,
+    and that second job joins them to the bucket's written output: it
+    re-runs no plan, so a bucket's errors cost a parquet read, not a
+    second pass of the UDF.
     """
     plan_fn = _PLANS[mode]
     key = [fingerprint(plan.get("settings")), mode]
@@ -196,7 +216,15 @@ def run_checkpointed(
     todo = [b for b in range(n_buckets) if b not in run.done]
     staging = (_stage_bucketed(df, out_dir, n_buckets, fp)
                if todo and n_buckets > 1 else None)
-    for bucket in todo:
+    # every job of this run carries the tag, so a failure can cancel the
+    # bucket still in flight
+    tag = f"run_checkpointed-{uuid.uuid4().hex}"
+
+    def write(bucket: int) -> dict:
+        """Write one bucket as ONE Spark job with its lineage observed on
+        it (plus the quarantine job when it saw poison documents); returns
+        the lineage row."""
+        spark.sparkContext.addJobTag(tag)
         if staging is None:
             part = df
         elif os.path.exists(os.path.join(staging, f"bucket={bucket}")):
@@ -207,19 +235,50 @@ def run_checkpointed(
             # hash bucket received no rows — still emit an (empty) committed
             # output dir so read_checkpointed's bucket=* glob stays uniform
             part = spark.createDataFrame([], df.schema)
-        docs = _persist_coalesced(spark, plan_fn(spark, part, **plan))
-        docs.drop("n_span_errors").write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"bucket={bucket}")
-        )
+        docs = plan_fn(spark, part, **plan)
+        metrics = lineage_columns(docs)
         if "n_span_errors" in docs.columns:
-            docs.filter(F.col("n_span_errors") > 0).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, "_quarantine", f"bucket={bucket}"))
-        lineage_metrics(docs).withColumn("bucket", F.lit(bucket)).write.mode(
+            errs = docs.select("doc_id", "n_span_errors").schema
+            metrics.append(F.collect_set(F.when(
+                F.col("n_span_errors") > 0, F.struct(*errs.names)
+            )).alias("poison"))
+        data_dir = os.path.join(out_dir, f"bucket={bucket}")
+        obs = Observation()
+        docs.observe(obs, *metrics).drop("n_span_errors").write.mode(
             "overwrite"
-        ).parquet(os.path.join(out_dir, "_lineage", f"bucket={bucket}"))
-        docs.unpersist()
-        run.commit_bucket(bucket)
+        ).parquet(data_dir)
+        lineage = obs.get
+        poison = lineage.pop("poison", None)
+        if poison:
+            # the poison documents as this job wrote them, plus their
+            # counts: a parquet read and a broadcast join, no plan re-run
+            spark.read.parquet(data_dir).join(
+                spark.createDataFrame(poison, errs), "doc_id"
+            ).write.mode("overwrite").parquet(
+                os.path.join(out_dir, "_quarantine", f"bucket={bucket}"))
+        return lineage
+
+    queue = iter(todo)
+    with ThreadPoolExecutor(max_workers=_IN_FLIGHT) as pool:
+        # bucket jobs keep the caller's local properties (job group,
+        # scheduler pool) and session tags, as on the caller's thread
+        target = inheritable_thread_target(spark)(write)
+        running = {pool.submit(target, b): b for b in islice(queue, _IN_FLIGHT)}
+        try:
+            # commits run here, in completion order, and a bucket starts
+            # only after a commit: once a bucket fails, none starts
+            while running:
+                fut = next(as_completed(running))
+                bucket = running.pop(fut)
+                run.lineage[str(bucket)] = fut.result()
+                run.commit_bucket(bucket)
+                running.update((pool.submit(target, b), b)
+                               for b in islice(queue, 1))
+        except BaseException:
+            # as if the process had died: the bucket in flight is cancelled
+            # and never committed
+            spark.sparkContext.cancelJobsWithTag(tag)
+            raise
     if staging is not None and len(run.done) == n_buckets:
         # every bucket committed: the staged copy is dead weight, drop it
         # (an Iceberg bucket partition spec has no copy to drop)

@@ -7,9 +7,10 @@
 
 Reads a (doc_id, spans) parquet/json/csv input, sanitizes (or extracts the
 main content of) text spans, and writes every mode through
-``checkpoint.run_checkpointed``: docs + per-partition lineage (+ quarantine
-under a non-raise --on-error) + an atomic resume manifest. Rerunning the
-same command into the same --output resumes. ``scripts/build_pyfiles.py``
+``checkpoint.run_checkpointed``: docs (+ quarantine for buckets with errors
+under a non-raise --on-error) + an atomic resume manifest that carries each
+bucket's lineage. Rerunning the same command into the same --output resumes;
+the final JSON line reports the lineage totals. ``scripts/build_pyfiles.py``
 produces the --py-files zip.
 """
 
@@ -87,10 +88,11 @@ def main(argv: list[str] | None = None) -> int:
                          " default exploded plan spreads mega-docs)")
     ap.add_argument("--on-error", choices=("raise", "keep", "null"),
                     default="raise",
-                    help="sanitize mode: poison-span policy; keep/null write"
-                         " documents with errored spans to"
-                         " <output>/_quarantine and count them in lineage"
-                         " n_errors")
+                    help="sanitize mode: poison-span policy; keep/null count"
+                         " errored spans in the manifest lineage and stdout"
+                         " n_errors and write their documents to"
+                         " <output>/_quarantine/bucket=<k> (buckets with"
+                         " errors only)")
     ap.add_argument("--memoize", type=int, default=0,
                     help="per-worker sanitize output cache size (exact; for"
                          " boilerplate-heavy corpora)")
@@ -120,15 +122,20 @@ def main(argv: list[str] | None = None) -> int:
 
     active = SparkSession.getActiveSession()
     spark = active or get_spark("sanitize-job", parallelism=args.parallelism)
-    run = run_checkpointed(
-        spark, read_input(spark, args.input, args.format), args.output,
-        n_buckets=args.buckets, mode=args.mode, salt_buckets=args.salt, **plan,
-    )
+    try:
+        run = run_checkpointed(
+            spark, read_input(spark, args.input, args.format), args.output,
+            n_buckets=args.buckets, mode=args.mode, salt_buckets=args.salt,
+            **plan,
+        )
+    finally:
+        if active is None:
+            spark.stop()
+    totals = {k: sum(row[k] for row in run.lineage.values())
+              for k in ("n_docs", "n_spans", "text_bytes_out", "n_errors")}
     print(json.dumps({"input": args.input, "output": args.output,
                       "config": args.config, "mode": args.mode,
-                      "buckets_done": sorted(run.done)}))
-    if active is None:
-        spark.stop()
+                      "buckets_done": run.done, **totals}))
     return 0
 
 

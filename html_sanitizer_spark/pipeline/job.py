@@ -40,7 +40,7 @@ tests/test_spark_tier1.py via span-sequence equality.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import (
@@ -54,6 +54,7 @@ __all__ = [
     "extract_spans",
     "explode_spans",
     "reassemble_spans",
+    "lineage_columns",
     "lineage_metrics",
 ]
 
@@ -271,47 +272,48 @@ def extract_spans(
     ))
 
 
-def lineage_metrics(docs: DataFrame) -> DataFrame:
-    """Per-partition lineage rows (n_spans, n_docs_approx, text_bytes_out,
-    n_media_spans, n_errors) over a document-level (doc_id, spans[,
+def lineage_columns(docs: DataFrame) -> list[Column]:
+    """The lineage aggregates over a document-level (doc_id, spans[,
     n_span_errors]) frame — the output of ``sanitize_spans`` on either
-    plan, or of ``extract_spans``. All per-row work is map-side array
-    expressions (aggregate/filter over the spans array); the only shuffle
-    is the per-partition groupBy. Null span elements count toward n_spans
-    but toward neither bytes nor media, and an empty/null spans array
-    counts as ONE span (the placeholder row posexplode_outer keeps for
-    such docs), so both plans report the same totals (ADVICE r05 #1)."""
-    has_err = "n_span_errors" in docs.columns
+    plan, or of ``extract_spans``: ``n_docs`` (exact), ``n_spans``,
+    ``text_bytes_out``, ``n_media_spans`` and ``n_errors``, each 0 on an
+    empty frame. Per-row work is map-side array expressions, so the
+    columns fit ``DataFrame.observe`` on a write as well as ``agg``. Null
+    span elements count toward n_spans but toward neither bytes nor
+    media, and an empty/null spans array counts as ONE span (the
+    placeholder row posexplode_outer keeps for such docs), so both plans
+    report the same totals (ADVICE r05 #1)."""
     spans = F.coalesce(F.col("spans"), F.array())
-    row = docs.select(
-        "doc_id",
-        F.spark_partition_id().alias("part_id"),
-        F.greatest(F.size(spans), F.lit(1)).alias("_n_spans"),
-        F.aggregate(
-            spans,
-            F.lit(0).cast("long"),
-            lambda acc, s: acc
-            + F.coalesce(
-                F.when(
-                    (s["kind"] == F.lit("text")) & s["text"].isNotNull(),
-                    F.length(s["text"]).cast("long"),
-                ),
-                F.lit(0).cast("long"),
+    text_bytes = F.aggregate(
+        spans,
+        F.lit(0).cast("long"),
+        lambda acc, s: acc
+        + F.coalesce(
+            F.when(
+                (s["kind"] == F.lit("text")) & s["text"].isNotNull(),
+                F.length(s["text"]).cast("long"),
             ),
-        ).alias("_text_bytes"),
-        F.size(
-            F.filter(spans, lambda s: s.isNotNull() & (s["kind"] != F.lit("text")))
-        ).alias("_n_media"),
-        (
-            F.coalesce(F.col("n_span_errors"), F.lit(0))
-            if has_err
-            else F.lit(0)
-        ).alias("_n_err"),
+            F.lit(0).cast("long"),
+        ),
     )
-    return row.groupBy("part_id").agg(
-        F.sum("_n_spans").alias("n_spans"),
-        F.approx_count_distinct("doc_id").alias("n_docs_approx"),
-        F.sum("_text_bytes").alias("text_bytes_out"),
-        F.sum("_n_media").alias("n_media_spans"),
-        F.sum("_n_err").alias("n_errors"),
+    n_media = F.size(
+        F.filter(spans, lambda s: s.isNotNull() & (s["kind"] != F.lit("text")))
     )
+    n_err = (F.coalesce(F.col("n_span_errors"), F.lit(0))
+             if "n_span_errors" in docs.columns else F.lit(0))
+
+    def total(col, name):
+        return F.coalesce(F.sum(col), F.lit(0)).cast("long").alias(name)
+
+    return [
+        F.count(F.lit(1)).alias("n_docs"),
+        total(F.greatest(F.size(spans), F.lit(1)), "n_spans"),
+        total(text_bytes, "text_bytes_out"),
+        total(n_media, "n_media_spans"),
+        total(n_err, "n_errors"),
+    ]
+
+
+def lineage_metrics(docs: DataFrame) -> DataFrame:
+    """One totals row of ``lineage_columns`` over ``docs``."""
+    return docs.agg(*lineage_columns(docs))

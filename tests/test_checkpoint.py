@@ -5,18 +5,23 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
+import time
 
 import pytest
+from pyspark.sql import functions as F
 
 from html_sanitizer_spark.engine.settings import Settings
+from html_sanitizer_spark.pipeline import checkpoint
 from html_sanitizer_spark.pipeline.checkpoint import (
     MANIFEST_NAME,
     CheckpointedRun,
     read_checkpointed,
     run_checkpointed,
 )
+from html_sanitizer_spark.pipeline.job import lineage_metrics
 from html_sanitizer_spark.pipeline.synth import DOC_SCHEMA, synth_spans_df
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -63,6 +68,11 @@ def _crash_after_commits(monkeypatch, n, next_bucket_written=False):
     monkeypatch.setattr(CheckpointedRun, "commit_bucket", commit)
 
 
+def _manifest(out_dir):
+    with open(os.path.join(out_dir, MANIFEST_NAME)) as fh:
+        return json.load(fh)
+
+
 def _collect_sorted(df):
     return sorted(
         ((r["doc_id"], [tuple(s) for s in r["spans"]]) for r in df.collect()),
@@ -75,6 +85,7 @@ def test_resume_after_crash(spark, tmp_path, monkeypatch):
     full_dir = str(tmp_path / "full")
     run_checkpointed(spark, df, full_dir, n_buckets=4)
     want = _collect_sorted(read_checkpointed(spark, full_dir))
+    want_lineage = _manifest(full_dir)["lineage"]
 
     crash_dir = str(tmp_path / "crash")
     _crash_after_commits(monkeypatch, 2)
@@ -89,6 +100,7 @@ def test_resume_after_crash(spark, tmp_path, monkeypatch):
     assert sorted(run.done) == [0, 1, 2, 3]
     got = _collect_sorted(read_checkpointed(spark, crash_dir))
     assert got == want
+    assert _manifest(crash_dir)["lineage"] == want_lineage
 
     # crash BETWEEN the commit points: the third bucket's data write
     # lands, then its manifest commit raises; the resume redoes it
@@ -103,7 +115,89 @@ def test_resume_after_crash(spark, tmp_path, monkeypatch):
     assert sorted(run.done) == [0, 1, 2, 3]
     got = _collect_sorted(read_checkpointed(spark, out))
     assert got == want
+    assert _manifest(out)["lineage"] == want_lineage
     df.unpersist()
+
+
+def test_failed_bucket_stops_the_run(spark, tmp_path, monkeypatch):
+    """A 4-bucket run whose third bucket's plan raises fails like a crash:
+    the error reaches the caller without waiting out the bucket still in
+    flight (its job is cancelled and never committed), no bucket starts
+    and no commit lands after the failure, and the resume matches an
+    uninterrupted run."""
+    df = synth_spans_df(spark, 120, seed=5, mega_every=0).cache()
+    full_dir = str(tmp_path / "full")
+    run_checkpointed(spark, df, full_dir, n_buckets=4)
+
+    events = []
+    stalled = str(tmp_path / "bucket1-running")
+    orig_plan = checkpoint._PLANS["sanitize"]
+    orig_commit = CheckpointedRun.commit_bucket
+
+    def stall(doc_id):  # runs in a Python worker: flag, then hang once
+        if not os.path.exists(stalled):
+            open(stalled, "w").close()
+            time.sleep(240)
+        return doc_id
+
+    def plan(spark, part, **kw):
+        bucket = int(re.search(r"bucket=(\d+)", part.inputFiles()[0])[1])
+        events.append(("plan", bucket))
+        docs = orig_plan(spark, part, **kw)
+        if bucket == 1:
+            # bucket 1's write job hangs until something cancels it
+            return docs.withColumn("doc_id", F.udf(stall, "string")("doc_id"))
+        if bucket == 2:
+            # bucket 2 starts after bucket 0's commit and fails while
+            # bucket 1's job is running
+            deadline = time.monotonic() + 120
+            while not os.path.exists(stalled) and time.monotonic() < deadline:
+                time.sleep(0.1)
+            events.append(("fail", bucket))
+            raise RuntimeError("injected plan failure")
+        return docs
+
+    def commit(self, bucket):
+        events.append(("commit", bucket))
+        orig_commit(self, bucket)
+
+    monkeypatch.setitem(checkpoint._PLANS, "sanitize", plan)
+    monkeypatch.setattr(CheckpointedRun, "commit_bucket", commit)
+    out = str(tmp_path / "out")
+    started = time.monotonic()
+    with pytest.raises(RuntimeError, match="injected plan failure"):
+        run_checkpointed(spark, df, out, n_buckets=4)
+    assert time.monotonic() - started < 120  # bucket 1 did not run out
+    monkeypatch.undo()
+
+    assert events[events.index(("fail", 2)) + 1:] == []
+    assert [e for e in events if e[0] == "commit"] == [("commit", 0)]
+    manifest = _manifest(out)
+    assert manifest["done"] == [0] and list(manifest["lineage"]) == ["0"]
+
+    run = run_checkpointed(spark, df, out, n_buckets=4)
+    assert run.done == [0, 1, 2, 3]
+    assert (_collect_sorted(read_checkpointed(spark, out))
+            == _collect_sorted(read_checkpointed(spark, full_dir)))
+    assert _manifest(out)["lineage"] == _manifest(full_dir)["lineage"]
+    df.unpersist()
+
+
+def test_bucket_jobs_keep_callers_job_group(spark, tmp_path):
+    """Buckets run on pool threads, yet every job of the run carries the
+    caller's job group, so cancelJobGroup still reaches all of them."""
+    df = synth_spans_df(spark, 20, seed=3, mega_every=0)
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("checkpoint-run", "run_checkpointed")
+    try:
+        run_checkpointed(spark, df, str(tmp_path / "out"), n_buckets=2)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    assert sc.statusTracker().getJobIdsForGroup("checkpoint-run")
 
 
 def test_rerun_is_idempotent(spark, tmp_path):
@@ -127,6 +221,15 @@ def test_config_drift_refused(spark, tmp_path):
 
     with pytest.raises(ValueError, match="config fingerprint"):
         run_checkpointed(spark, df, out, n_buckets=2, mode="extract")
+
+    # a manifest without lineage comes from the layout that kept lineage
+    # in a parquet table: resuming into it would mix the two layouts
+    old = _manifest(out)
+    del old["lineage"]
+    with open(os.path.join(out, MANIFEST_NAME), "w") as fh:
+        json.dump(old, fh)
+    with pytest.raises(ValueError, match="Refusing to resume: manifest has no lineage"):
+        run_checkpointed(spark, df, out, n_buckets=2)
 
     # hooks hash by code: configs that differ only in their sanitize_href
     # lambda must not resume into each other's output
@@ -186,13 +289,15 @@ def test_staging_partition_pruned_io(spark, tmp_path, monkeypatch):
 def test_lineage_written(spark, tmp_path):
     df = synth_spans_df(spark, 30, seed=4, mega_every=0)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, df, out, n_buckets=2)
-    lineage = spark.read.parquet(os.path.join(out, "_lineage", "bucket=*"))
-    rows = lineage.collect()
-    assert sum(r["n_spans"] for r in rows) >= 30
-    assert {c for c in lineage.columns} >= {
-        "part_id", "n_spans", "n_docs_approx", "text_bytes_out", "bucket"
-    }
+    run = run_checkpointed(spark, df, out, n_buckets=2)
+    lineage = _manifest(out)["lineage"]
+    assert lineage == run.lineage
+    assert sorted(lineage) == [str(b) for b in run.done] == ["0", "1"]
+    assert sum(row["n_docs"] for row in lineage.values()) == 30
+    # the observed per-bucket rows add up to a rollup over the output
+    totals = lineage_metrics(read_checkpointed(spark, out)).first()
+    for k in ("n_docs", "n_spans", "text_bytes_out", "n_media_spans"):
+        assert sum(row[k] for row in lineage.values()) == totals[k], k
 
 
 def test_quarantine_written_on_keep(spark, tmp_path, poison_df):
@@ -204,6 +309,12 @@ def test_quarantine_written_on_keep(spark, tmp_path, poison_df):
     run = run_checkpointed(spark, df, out, n_buckets=2, on_error="keep")
     assert sorted(run.done) == [0, 1]
 
+    # only the poison document's bucket has a quarantine directory
+    lineage = _manifest(out)["lineage"]
+    assert sum(row["n_errors"] for row in lineage.values()) == 1
+    assert os.listdir(os.path.join(out, "_quarantine")) == [
+        f"bucket={b}" for b, row in lineage.items() if row["n_errors"]
+    ]
     q = spark.read.parquet(os.path.join(out, "_quarantine", "bucket=*"))
     qrows = q.collect()
     assert len(qrows) == 1 and "BOOM" in qrows[0]["spans"][0]["text"]
@@ -214,17 +325,16 @@ def test_quarantine_written_on_keep(spark, tmp_path, poison_df):
     texts = {r["doc_id"]: r["spans"][0]["text"] for r in main.collect()}
     assert texts["d3"] == "<p>BOOM</p>"
     assert texts["d0"] == "<p>ok 0</p>"
-    lineage = spark.read.parquet(os.path.join(out, "_lineage", "bucket=*"))
-    assert sum(r["n_errors"] for r in lineage.collect()) == 1
     # policy drift refused on resume
     with pytest.raises(ValueError, match="on_error"):
         run_checkpointed(spark, df, out, n_buckets=2, on_error="null")
 
 
 @pytest.mark.parametrize("nested", [False, True], ids=["exploded", "nested"])
-def test_cli_keep_quarantines_poison_doc(spark, tmp_path, poison_df, nested):
+def test_cli_keep_quarantines_poison_doc(spark, tmp_path, poison_df, nested,
+                                        capsys):
     """Every CLI plan flags a kept poison span: exactly one quarantined
-    document and one error in the lineage."""
+    document and one error in the manifest lineage and on stdout."""
     from html_sanitizer_spark.pipeline.cli import main
 
     in_dir = str(tmp_path / "in")
@@ -235,5 +345,7 @@ def test_cli_keep_quarantines_poison_doc(spark, tmp_path, poison_df, nested):
                  *(["--nested"] if nested else [])]) == 0
     q = spark.read.parquet(os.path.join(out, "_quarantine", "bucket=*"))
     assert [(r["doc_id"], r["n_span_errors"]) for r in q.collect()] == [("d3", 1)]
-    lineage = spark.read.parquet(os.path.join(out, "_lineage", "bucket=*"))
-    assert sum(r["n_errors"] for r in lineage.collect()) == 1
+    lineage = _manifest(out)["lineage"].values()
+    assert sum(row["n_errors"] for row in lineage) == 1
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["n_errors"] == 1 and summary["n_docs"] == 8

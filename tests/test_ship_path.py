@@ -47,11 +47,13 @@ def test_spark_submit_py_files(spark, tmp_path):
         [ln for ln in r.stdout.splitlines() if ln.startswith("{")][-1]
     )
     assert summary["buckets_done"] == [0, 1]
-    assert os.path.exists(os.path.join(out_dir, "_sanitize_manifest.json"))
+    assert summary["n_docs"] == 30 and summary["n_errors"] == 0
+    with open(os.path.join(out_dir, "_sanitize_manifest.json")) as fh:
+        lineage = json.load(fh)["lineage"]
+    assert sorted(lineage) == ["0", "1"]
+    assert sum(row["n_docs"] for row in lineage.values()) == 30
     got = spark.read.parquet(os.path.join(out_dir, "bucket=*"))
     assert got.count() == 30
-    lineage = spark.read.parquet(os.path.join(out_dir, "_lineage", "bucket=*"))
-    assert lineage.count() > 0
 
 
 def test_cli_json_and_csv_sources(spark, tmp_path):
@@ -145,8 +147,10 @@ def test_cli_smoke_every_mode(spark, tmp_path, flags):
     e_out = str(tmp_path / "eout")
     assert main(["--input", str(e_in), "--format", "json", "--output", e_out,
                  "--buckets", "2", "--salt", "2", *flags]) == 0
-    assert os.path.exists(os.path.join(e_out, "_sanitize_manifest.json"))
-    assert spark.read.parquet(os.path.join(e_out, "_lineage", "bucket=*")).count()
+    with open(os.path.join(e_out, "_sanitize_manifest.json")) as fh:
+        manifest = json.load(fh)
+    assert sorted(manifest["lineage"]) == [str(b) for b in manifest["done"]]
+    assert sum(row["n_docs"] for row in manifest["lineage"].values()) == 1
     rows = {r["doc_id"]: r["spans"]
             for r in read_checkpointed(spark, e_out).collect()}
     want = "real article body" if "extract" in flags else sanitize(_PAGE)
