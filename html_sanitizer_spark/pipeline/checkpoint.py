@@ -53,6 +53,9 @@ Protocol:
   count refuses, and so does resuming into a manifest without lineage
   (an older layout that kept lineage as a separate parquet table). The
   plan (exploded or nested) is left out: both agree span for span.
+- Both also record the input's identity (``_input_identity``): a rerun or
+  a resume over a changed input refuses, in the manifest and in a staged
+  copy's marker alike, and so does a manifest without it.
 """
 
 from __future__ import annotations
@@ -81,19 +84,44 @@ STAGING_DIR = "_staging"
 STAGING_MARKER = "_staging_commit.json"
 
 
+def _input_identity(spark: SparkSession, df: DataFrame) -> str:
+    """A hash of what ``df`` reads: its sorted input files with their sizes
+    and modification times or, for a frame that reads no files, its plan's
+    ``semanticHash`` (which may not survive a new process: such a resume
+    refuses rather than mixes)."""
+    files = sorted(df.inputFiles())
+    if not files:
+        return str(df.semanticHash())
+    # through Hadoop's FileSystem, so any scheme the read used works
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    stats = []
+    for uri in files:
+        path = hadoop_path(uri)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        stats.append([uri, st.getLen(), st.getModificationTime()])
+    return hashlib.sha256(json.dumps(stats).encode()).hexdigest()[:16]
+
+
 def _stage_bucketed(df: DataFrame, out_dir: str, n_buckets: int,
-                    fp: str) -> str:
+                    fp: str, input_id: str) -> str:
     """One-pass bucketed staging write (the Iceberg ``bucket(n, doc_id)``
     partition-spec analog): every later per-bucket read prunes to its own
     ``bucket=<k>`` directory instead of rescanning the input. Committed via
     the same atomic tmp+rename marker pattern as the run manifest; a marker
     with matching (n_buckets, fingerprint) means the staged copy is
-    complete and reusable across resume attempts."""
+    complete and reusable across resume attempts. A marker from another
+    input refuses."""
     staging = os.path.join(out_dir, STAGING_DIR)
     marker = os.path.join(staging, STAGING_MARKER)
     if os.path.exists(marker):
         with open(marker) as fh:
             m = json.load(fh)
+        if m.get("input") != input_id:
+            raise ValueError(
+                f"Refusing to resume: staged input {m.get('input')} !="
+                f" current input {input_id}"
+            )
         if m["n_buckets"] == n_buckets and m["config_fingerprint"] == fp:
             return staging
     (
@@ -104,7 +132,8 @@ def _stage_bucketed(df: DataFrame, out_dir: str, n_buckets: int,
     )
     fd, tmp = tempfile.mkstemp(dir=staging, prefix="._staging")
     with os.fdopen(fd, "w") as fh:
-        json.dump({"n_buckets": n_buckets, "config_fingerprint": fp}, fh)
+        json.dump({"n_buckets": n_buckets, "config_fingerprint": fp,
+                   "input": input_id}, fh)
     os.replace(tmp, marker)
     return staging
 
@@ -114,6 +143,7 @@ class CheckpointedRun:
     out_dir: str
     n_buckets: int
     config_fingerprint: str
+    input: str
     done: list[int] = field(default_factory=list)
     on_error: str = "raise"
     # str(bucket) -> that bucket's lineage row (job.lineage_columns)
@@ -125,7 +155,7 @@ class CheckpointedRun:
 
     @classmethod
     def load_or_create(cls, out_dir: str, n_buckets: int, fingerprint: str,
-                       on_error: str = "raise"):
+                       input_id: str, on_error: str = "raise"):
         path = os.path.join(out_dir, MANIFEST_NAME)
         if os.path.exists(path):
             with open(path) as fh:
@@ -152,10 +182,16 @@ class CheckpointedRun:
                     " a build that kept lineage in a parquet table; would"
                     " mix lineage layouts)"
                 )
-            return cls(out_dir, n_buckets, fingerprint, list(m["done"]),
-                       on_error, m["lineage"])
+            if m.get("input") != input_id:
+                raise ValueError(
+                    f"Refusing to resume: manifest input {m.get('input')} !="
+                    f" current input {input_id} (would mix inputs)"
+                )
+            return cls(out_dir, n_buckets, fingerprint, input_id,
+                       list(m["done"]), on_error, m["lineage"])
         os.makedirs(out_dir, exist_ok=True)
-        return cls(out_dir, n_buckets, fingerprint, on_error=on_error)
+        return cls(out_dir, n_buckets, fingerprint, input_id,
+                   on_error=on_error)
 
     def commit_bucket(self, bucket: int) -> None:
         """Atomic manifest update AFTER the bucket's data is fully written,
@@ -168,6 +204,7 @@ class CheckpointedRun:
         payload = {
             "n_buckets": self.n_buckets,
             "config_fingerprint": self.config_fingerprint,
+            "input": self.input,
             "done": self.done,
             "on_error": self.on_error,
             "lineage": self.lineage,
@@ -210,11 +247,12 @@ def run_checkpointed(
     if mode == "extract":
         key.append(plan.get("max_link_density"))
     fp = hashlib.sha256(json.dumps(key).encode()).hexdigest()[:16]
-    run = CheckpointedRun.load_or_create(out_dir, n_buckets, fp,
+    input_id = _input_identity(spark, df)
+    run = CheckpointedRun.load_or_create(out_dir, n_buckets, fp, input_id,
                                          plan.get("on_error", "raise"))
 
     todo = [b for b in range(n_buckets) if b not in run.done]
-    staging = (_stage_bucketed(df, out_dir, n_buckets, fp)
+    staging = (_stage_bucketed(df, out_dir, n_buckets, fp, input_id)
                if todo and n_buckets > 1 else None)
     # every job of this run carries the tag, so a failure can cancel the
     # bucket still in flight

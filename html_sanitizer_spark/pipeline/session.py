@@ -31,9 +31,12 @@ def get_spark(
     JVMs (own heap, own GC, own Python workers) talking to the driver over
     the block/shuffle services, the closest single-host proxy to a
     multi-executor cluster and the shape the N->4N executor scaling
-    evidence runs on (bench.py --scaling-executors)."""
+    evidence runs on (bench.py --scaling-executors). Without
+    ``parallelism``, ``SPARK_GRAFT_CPUS`` sets the thread count, else the
+    process's CPU-affinity count."""
     if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                         len(os.sched_getaffinity(0))))
     if executors is not None:
         master = f"local-cluster[{executors},{executor_cores},{executor_mem_mb}]"
         parallelism = executors * executor_cores

@@ -349,3 +349,46 @@ def test_cli_keep_quarantines_poison_doc(spark, tmp_path, poison_df, nested,
     assert sum(row["n_errors"] for row in lineage) == 1
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["n_errors"] == 1 and summary["n_docs"] == 8
+
+
+def test_changed_input_refused(spark, tmp_path, capsys):
+    """A rerun into a finished --output with another input refuses instead
+    of reporting the old input's output as done, and so does a manifest
+    that records no input."""
+    from html_sanitizer_spark.pipeline.cli import main
+
+    in_a, in_b = str(tmp_path / "a"), str(tmp_path / "b")
+    synth_spans_df(spark, 20, seed=1, mega_every=0).write.parquet(in_a)
+    synth_spans_df(spark, 50, seed=2, mega_every=0).write.parquet(in_b)
+    out = str(tmp_path / "out")
+    flags = ["--output", out, "--buckets", "2", "--salt", "2"]
+    assert main(["--input", in_a, *flags]) == 0
+    with pytest.raises(ValueError, match="Refusing to resume: manifest input"):
+        main(["--input", in_b, *flags])
+    assert main(["--input", in_a, *flags]) == 0  # same input: a no-op
+
+    old = _manifest(out)
+    del old["input"]
+    with open(os.path.join(out, MANIFEST_NAME), "w") as fh:
+        json.dump(old, fh)
+    with pytest.raises(ValueError, match="Refusing to resume: manifest input"):
+        main(["--input", in_a, *flags])
+
+
+def test_changed_input_refused_with_staged_copy(spark, tmp_path, monkeypatch):
+    """A crash after staging and before the first commit leaves a staged
+    copy and no manifest: a resume over another input refuses instead of
+    sanitizing the stale copy."""
+    a = synth_spans_df(spark, 20, seed=1, mega_every=0)
+    b = synth_spans_df(spark, 50, seed=2, mega_every=0)
+    out = str(tmp_path / "out")
+    _crash_after_commits(monkeypatch, 0, next_bucket_written=True)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, a, out, n_buckets=2)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(out, MANIFEST_NAME))
+    with pytest.raises(ValueError, match="Refusing to resume: staged input"):
+        run_checkpointed(spark, b, out, n_buckets=2)
+    run = run_checkpointed(spark, a, out, n_buckets=2)
+    assert run.done == [0, 1]
+    assert read_checkpointed(spark, out).count() == 20
