@@ -10,7 +10,6 @@ Layout:
   functions/  Spark column functions + vectorized pandas/Arrow UDFs
   pipeline/   batch job topology: explode -> salt -> sanitize -> reassemble,
               lineage, checkpoint/resume, deterministic fixture synthesis
-  streaming/  incremental variant (Structured Streaming foreachBatch)
 """
 
 __version__ = "0.1.0"

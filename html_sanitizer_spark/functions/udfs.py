@@ -248,20 +248,6 @@ def sanitize_spans_arrow(
     return df.mapInArrow(fix_batches, schema)
 
 
-def register_sql_functions(spark, settings=None, name: str = "sanitize_html"):
-    """Expose the sanitizer to Spark SQL:
-
-        register_sql_functions(spark)
-        spark.sql("SELECT sanitize_html(html_col) FROM fragments")
-
-    Registers the fused Arrow-batched sanitize UDF under ``name`` (one
-    registration per config — pass a config name or Settings and a distinct
-    ``name`` for additional variants)."""
-    udf = make_sanitize_udf(settings)
-    spark.udf.register(name, udf)
-    return udf
-
-
 # main-content extraction result: kept-block text + block accounting, so
 # lineage can report extraction yield (blocks kept vs boilerplate dropped)
 # without a second pass over the corpus.

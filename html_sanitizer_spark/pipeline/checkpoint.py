@@ -241,6 +241,12 @@ def run_checkpointed(
     and that second job joins them to the bucket's written output: it
     re-runs no plan, so a bucket's errors cost a parquet read, not a
     second pass of the UDF.
+
+    A run that must resume in another process, or over a rebuilt frame,
+    needs a file-backed ``df`` (the CLI always reads files): a frame that
+    reads no files is identified by its plan's ``semanticHash``, which a
+    ``createDataFrame`` frame rebuilt over the same rows does not keep, so
+    that resume refuses.
     """
     plan_fn = _PLANS[mode]
     key = [fingerprint(plan.get("settings")), mode]

@@ -2173,11 +2173,8 @@ _ORACLE_ANN_LSH_WIDE = _lsh_oracle_sql(n_bits=8)
 
 
 def q_event_window_rollup(spark, sf_dir):
-    """Event-time tumbling-window rollup (the batch twin of the streaming
-    watermarked aggregation in streaming/stream_job.py): per (1-day window,
-    event_type) counts and value sums over the events table. F.window is
-    the same operator Structured Streaming ages out with a watermark, so
-    the batch and streaming rollups share semantics; alignment is
+    """Event-time tumbling-window rollup: per (1-day window, event_type)
+    counts and value sums over the events table. Window alignment is
     deterministic because the session timezone is pinned to UTC."""
     e = _events(spark, sf_dir)
     return (
@@ -2209,13 +2206,12 @@ FROM events GROUP BY 1, 2
 
 
 def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (batch twin of the applyInPandasWithState
-    streaming sessionizer in streaming/sessionize.py): a new session starts
-    when a user's inter-event gap exceeds 30 minutes; one output row per
-    session with its bounds and event count. Shape at scale: both windows
-    are partitioned by user_id (sessionization is user-local by
-    definition), so the shuffle is one hash exchange on the session key —
-    no global ordering anywhere."""
+    """Gap-based sessionization: a new session starts when a user's
+    inter-event gap exceeds 30 minutes; one output row per session with
+    its bounds and event count. Shape at scale: both windows are
+    partitioned by user_id (sessionization is user-local by definition),
+    so the shuffle is one hash exchange on the session key — no global
+    ordering anywhere."""
     e = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # parquet reads ts as TIMESTAMP_NTZ; route through timestamp for epoch
@@ -6267,19 +6263,10 @@ def q_gopher_filters(spark, sf_dir):
     scan — array builds, filters, and scalar flags; zero joins, zero
     shuffles. Like C4, it composes in FRONT of dedup (cheap map rules
     first, pair-generating stages after)."""
-    return gopher_feature_frame(
-        _spread(
-            spark,
-            _docs(spark, sf_dir).filter(F.length(F.trim(F.col("text"))) > 0),
-        )
+    d = _spread(
+        spark,
+        _docs(spark, sf_dir).filter(F.length(F.trim(F.col("text"))) > 0),
     )
-
-
-def gopher_feature_frame(d: DataFrame) -> DataFrame:
-    """The Gopher rule battery as a frame transform over (doc_id, text)
-    rows — single-sourced between the batch operator and the streaming
-    gate (streaming/stream_job.py::stream_quality_gate): one map-side
-    projection, so it applies to a micro-batch exactly as to a scan."""
     w0 = F.split(F.trim(F.col("text")), " ")
     n0 = F.size(w0)
     empty = F.array().cast("array<string>")

@@ -392,3 +392,33 @@ def test_changed_input_refused_with_staged_copy(spark, tmp_path, monkeypatch):
     run = run_checkpointed(spark, a, out, n_buckets=2)
     assert run.done == [0, 1]
     assert read_checkpointed(spark, out).count() == 20
+
+
+def test_rebuilt_in_memory_input_refused(spark, tmp_path, monkeypatch):
+    """A frame that reads no files is identified by its plan's
+    ``semanticHash``, and a ``createDataFrame`` frame rebuilt over the
+    same rows hashes differently: a resume after the rebuild refuses
+    (it never mixes inputs) and leaves the committed bucket untouched."""
+    rows = synth_spans_df(spark, 20, seed=1, mega_every=0).collect()
+    out = str(tmp_path / "out")
+    _crash_after_commits(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, spark.createDataFrame(rows, DOC_SCHEMA), out,
+                         n_buckets=2)
+    monkeypatch.undo()
+    manifest = _manifest(out)
+    (done,) = manifest["done"]
+    bucket_dir = os.path.join(out, f"bucket={done}")
+
+    def snapshot():
+        return {
+            name: open(os.path.join(bucket_dir, name), "rb").read()
+            for name in os.listdir(bucket_dir)
+        }
+
+    committed = snapshot()
+    with pytest.raises(ValueError, match="Refusing to resume"):
+        run_checkpointed(spark, spark.createDataFrame(rows, DOC_SCHEMA), out,
+                         n_buckets=2)
+    assert _manifest(out) == manifest
+    assert snapshot() == committed

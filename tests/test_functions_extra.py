@@ -1,5 +1,5 @@
 """Tests for the scale-path operators: LSH/IVF ANN recall vs brute force,
-multimodal plumbing, simhash properties, streaming incremental sanitize."""
+multimodal plumbing, simhash properties."""
 
 from __future__ import annotations
 
@@ -285,84 +285,6 @@ class TestMultimodal:
                 assert 4 <= r["width"] <= 16 and r["n_frames"] == 1
             else:
                 assert r["width"] == 8000 and 1 <= r["n_frames"] <= 64
-
-
-class TestStreaming:
-    def test_incremental_sanitize(self, spark, tmp_path):
-        from html_sanitizer_spark.streaming.stream_job import (
-            stream_sanitize_parquet_dir,
-        )
-
-        in_dir = str(tmp_path / "in")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        batch1 = synth_spans_df(spark, 40, seed=21, mega_every=0)
-        batch1.write.mode("append").parquet(in_dir)
-
-        q = stream_sanitize_parquet_dir(spark, in_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-        got1 = spark.read.parquet(out_dir).count()
-        assert got1 == 40
-
-        # second increment: only new files processed (checkpoint offset)
-        synth_spans_df(spark, 25, seed=22, mega_every=0).write.mode(
-            "append"
-        ).parquet(in_dir)
-        q2 = stream_sanitize_parquet_dir(spark, in_dir, out_dir, ckpt)
-        q2.awaitTermination(120)
-        assert spark.read.parquet(out_dir).count() == 65
-
-    def test_epoch_replay_is_idempotent(self, spark, tmp_path):
-        """A crash between the epoch write and the checkpoint commit makes
-        Structured Streaming replay the microbatch — the epoch-keyed
-        overwrite sink must absorb the replay without duplicating rows."""
-        from html_sanitizer_spark.streaming.stream_job import (
-            read_stream_output,
-            write_epoch,
-        )
-
-        out_dir = str(tmp_path / "out")
-        batch = synth_spans_df(spark, 30, seed=31, mega_every=0)
-        write_epoch(batch, out_dir, epoch_id=0)
-        write_epoch(batch, out_dir, epoch_id=0)  # simulated replay
-        got = read_stream_output(spark, out_dir)
-        assert got.count() == 30
-        assert got.select("doc_id").distinct().count() == 30
-        assert got.columns == ["doc_id", "spans"]
-        # a genuinely new epoch still lands alongside
-        write_epoch(synth_spans_df(spark, 5, seed=32, mega_every=0),
-                    out_dir, epoch_id=1)
-        assert read_stream_output(spark, out_dir).count() == 35
-
-
-def test_sql_registered_sanitizer(spark):
-    from html_sanitizer_spark.functions.udfs import register_sql_functions
-
-    register_sql_functions(spark)
-    spark.createDataFrame(
-        [("<b>x</b><script>evil()</script>",)], ["html"]
-    ).createOrReplaceTempView("fragments_sql_test")
-    row = spark.sql(
-        "SELECT sanitize_html(html) AS clean FROM fragments_sql_test"
-    ).collect()[0]
-    assert row["clean"] == "<strong>x</strong>"
-
-
-def test_streaming_exploded_plan(spark, tmp_path):
-    """Firehose shape: the streaming path with explode=True (salted
-    exploded plan inside foreachBatch) must produce the same output set."""
-    from html_sanitizer_spark.streaming.stream_job import (
-        read_stream_output,
-        stream_sanitize_parquet_dir,
-    )
-
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
-    synth_spans_df(spark, 30, seed=41, mega_every=0).write.parquet(in_dir)
-    q = stream_sanitize_parquet_dir(spark, in_dir, out_dir, ckpt, explode=True)
-    q.awaitTermination(120)
-    got = read_stream_output(spark, out_dir)
-    assert got.count() == 30
-    assert got.select("doc_id").distinct().count() == 30
 
 
 class TestMultimodalResizeAndFrames:

@@ -82,30 +82,6 @@ def test_golden_replay_remaining_configs(spark, config):
         assert got == want_text, f"{doc_id}: {want_text!r} != {got!r}"
 
 
-def test_golden_replay_streaming(spark, tmp_path):
-    """Golden replay through the Structured Streaming path: identical
-    semantics to batch (shared transformation)."""
-    from html_sanitizer_spark.streaming.stream_job import (
-        stream_sanitize_parquet_dir,
-    )
-
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    golden_spans_df(spark, "default").write.parquet(in_dir)
-    q = stream_sanitize_parquet_dir(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(180)
-    rows = {
-        r["doc_id"]: r["spans"][1]["text"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    want = _expected_by_doc("default")
-    assert set(rows) == set(want)
-    for doc_id, (case, want_text) in want.items():
-        got = rows[doc_id]
-        if case.strip:
-            got, want_text = got.strip(), want_text.strip()
-        assert got == want_text, doc_id
-
-
 def test_exploded_and_nested_agree(spark):
     df = synth_spans_df(spark, 200, seed=7, mega_every=0).cache()
     a = sanitize_spans(spark, df, explode=True, salt_buckets=8)
