@@ -31,6 +31,9 @@ Protocol:
   cancelled (as if the process had died; a job it submits after the
   cancel still runs, uncommitted), and that first error is re-raised.
 - bucket(doc) = pmod(xxhash64(doc_id), n_buckets) — stable under retries.
+  Without an explicit count a new run takes one bucket per
+  ``_BUCKET_BYTES`` of input files (at least one), and a resume takes the
+  manifest's count.
 - With more than one bucket the input is staged ONCE with
   ``partitionBy(bucket)``, so each per-bucket job reads only its own
   ``bucket=<k>`` directory: a filter on a *computed* xxhash64 column
@@ -49,10 +52,10 @@ Protocol:
 - The manifest and the staging marker record a fingerprint of
   ``configs.fingerprint(settings)`` (hooks hash by code), the mode and,
   in extract mode, ``max_link_density``; the manifest also records the
-  on_error policy. Resuming with a different fingerprint, policy or bucket
-  count refuses, and so does resuming into a manifest without lineage
-  (an older layout that kept lineage as a separate parquet table). The
-  plan (exploded or nested) is left out: both agree span for span.
+  on_error policy. Resuming with a different fingerprint, policy or
+  explicit bucket count refuses, and so does resuming into a manifest
+  without lineage (an older layout that kept lineage in a parquet table).
+  The plan (exploded or nested) is left out: both agree span for span.
 - Both also record the input's identity (``_input_identity``): a rerun or
   a resume over a changed input refuses, in the manifest and in a staged
   copy's marker alike, and so does a manifest without it.
@@ -62,6 +65,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
 import shutil
 import tempfile
@@ -82,16 +86,22 @@ __all__ = ["CheckpointedRun", "run_checkpointed"]
 MANIFEST_NAME = "_sanitize_manifest.json"
 STAGING_DIR = "_staging"
 STAGING_MARKER = "_staging_commit.json"
+# input bytes per derived bucket: the bucket is the unit of resume (a crash
+# loses at most _IN_FLIGHT of them) and costs ≈0.5 s of fixed work whatever
+# its size; on 4 cores 128 MB of parquet (one default input split) takes
+# ≈20 s to sanitize as plain text and minutes as markup, so that cost stays
+# a few per cent at most
+_BUCKET_BYTES = 128 * 1024 * 1024
 
 
-def _input_identity(spark: SparkSession, df: DataFrame) -> str:
-    """A hash of what ``df`` reads: its sorted input files with their sizes
-    and modification times or, for a frame that reads no files, its plan's
-    ``semanticHash`` (which may not survive a new process: such a resume
-    refuses rather than mixes)."""
+def _input_identity(spark: SparkSession, df: DataFrame) -> tuple[str, int]:
+    """A hash of what ``df`` reads, and its size in bytes: its sorted input
+    files with their sizes and modification times or, for a frame that
+    reads no files, its plan's ``semanticHash`` (which may not survive a
+    new process: such a resume refuses rather than mixes) and size 0."""
     files = sorted(df.inputFiles())
     if not files:
-        return str(df.semanticHash())
+        return str(df.semanticHash()), 0
     # through Hadoop's FileSystem, so any scheme the read used works
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
@@ -100,7 +110,8 @@ def _input_identity(spark: SparkSession, df: DataFrame) -> str:
         path = hadoop_path(uri)
         st = path.getFileSystem(conf).getFileStatus(path)
         stats.append([uri, st.getLen(), st.getModificationTime()])
-    return hashlib.sha256(json.dumps(stats).encode()).hexdigest()[:16]
+    return (hashlib.sha256(json.dumps(stats).encode()).hexdigest()[:16],
+            sum(size for _, size, _ in stats))
 
 
 def _stage_bucketed(df: DataFrame, out_dir: str, n_buckets: int,
@@ -149,49 +160,38 @@ class CheckpointedRun:
     # str(bucket) -> that bucket's lineage row (job.lineage_columns)
     lineage: dict[str, dict] = field(default_factory=dict)
 
-    @property
-    def manifest_path(self) -> str:
-        return os.path.join(self.out_dir, MANIFEST_NAME)
-
     @classmethod
-    def load_or_create(cls, out_dir: str, n_buckets: int, fingerprint: str,
-                       input_id: str, on_error: str = "raise"):
+    def load_or_create(cls, out_dir: str, n_buckets: int | None,
+                       fingerprint: str, input_id: str, input_bytes: int,
+                       on_error: str):
+        """Resume the run ``out_dir``'s manifest records (refusing as the
+        module docstring lists) or start one. ``n_buckets`` None takes the
+        manifest's count on a resume and, for a new run, one bucket per
+        ``_BUCKET_BYTES`` of input (at least 1)."""
         path = os.path.join(out_dir, MANIFEST_NAME)
-        if os.path.exists(path):
-            with open(path) as fh:
-                m = json.load(fh)
-            if m["config_fingerprint"] != fingerprint:
-                raise ValueError(
-                    "Refusing to resume: manifest config fingerprint "
-                    f"{m['config_fingerprint']} != current {fingerprint}"
-                )
-            if m["n_buckets"] != n_buckets:
-                raise ValueError(
-                    f"Refusing to resume: manifest n_buckets {m['n_buckets']}"
-                    f" != requested {n_buckets}"
-                )
-            if m.get("on_error", "raise") != on_error:
-                raise ValueError(
-                    f"Refusing to resume: manifest on_error "
-                    f"{m.get('on_error', 'raise')!r} != requested {on_error!r}"
-                    " (would mix poison-row policies across buckets)"
-                )
-            if "lineage" not in m:
-                raise ValueError(
-                    "Refusing to resume: manifest has no lineage (written by"
-                    " a build that kept lineage in a parquet table; would"
-                    " mix lineage layouts)"
-                )
-            if m.get("input") != input_id:
-                raise ValueError(
-                    f"Refusing to resume: manifest input {m.get('input')} !="
-                    f" current input {input_id} (would mix inputs)"
-                )
+        if not os.path.exists(path):
+            os.makedirs(out_dir, exist_ok=True)
+            if n_buckets is None:
+                n_buckets = max(1, math.ceil(input_bytes / _BUCKET_BYTES))
             return cls(out_dir, n_buckets, fingerprint, input_id,
-                       list(m["done"]), on_error, m["lineage"])
-        os.makedirs(out_dir, exist_ok=True)
+                       on_error=on_error)
+        with open(path) as fh:
+            m = json.load(fh)
+        if "lineage" not in m:
+            raise ValueError("Refusing to resume: manifest has no lineage")
+        if n_buckets is None:
+            n_buckets = m["n_buckets"]
+        for what, have, want in (
+            ("config fingerprint", m["config_fingerprint"], fingerprint),
+            ("n_buckets", m["n_buckets"], n_buckets),
+            ("on_error", m.get("on_error"), on_error),
+            ("input", m.get("input"), input_id),
+        ):
+            if have != want:
+                raise ValueError(f"Refusing to resume: manifest {what}"
+                                 f" {have!r} != current {want!r}")
         return cls(out_dir, n_buckets, fingerprint, input_id,
-                   on_error=on_error)
+                   list(m["done"]), on_error, m["lineage"])
 
     def commit_bucket(self, bucket: int) -> None:
         """Atomic manifest update AFTER the bucket's data is fully written,
@@ -212,7 +212,7 @@ class CheckpointedRun:
         fd, tmp = tempfile.mkstemp(dir=self.out_dir, prefix="._manifest")
         with os.fdopen(fd, "w") as fh:
             json.dump(payload, fh, indent=1)
-        os.replace(tmp, self.manifest_path)
+        os.replace(tmp, os.path.join(self.out_dir, MANIFEST_NAME))
 
 
 _PLANS = {"sanitize": sanitize_spans, "extract": extract_spans}
@@ -223,12 +223,15 @@ def run_checkpointed(
     spark: SparkSession,
     df: DataFrame,
     out_dir: str,
-    n_buckets: int = 8,
+    n_buckets: int | None = None,
     mode: str = "sanitize",
     **plan,
 ) -> CheckpointedRun:
     """Run ``mode``'s document-level plan over ``df`` into ``out_dir``
     bucket-by-bucket with resume, ``_IN_FLIGHT`` buckets at a time.
+    ``n_buckets`` None derives the count (``CheckpointedRun.load_or_create``):
+    an input under ``_BUCKET_BYTES``, or a frame that reads no files, runs
+    one bucket with no staged copy.
 
     ``plan`` keywords go unchanged to ``sanitize_spans`` (mode "sanitize")
     or ``extract_spans`` (mode "extract"). Each bucket is one Spark job:
@@ -253,9 +256,11 @@ def run_checkpointed(
     if mode == "extract":
         key.append(plan.get("max_link_density"))
     fp = hashlib.sha256(json.dumps(key).encode()).hexdigest()[:16]
-    input_id = _input_identity(spark, df)
+    input_id, input_bytes = _input_identity(spark, df)
     run = CheckpointedRun.load_or_create(out_dir, n_buckets, fp, input_id,
+                                         input_bytes,
                                          plan.get("on_error", "raise"))
+    n_buckets = run.n_buckets
 
     todo = [b for b in range(n_buckets) if b not in run.done]
     staging = (_stage_bucketed(df, out_dir, n_buckets, fp, input_id)

@@ -3,7 +3,7 @@
     spark-submit --py-files engine.zip -m ...     (cluster)
     python -m html_sanitizer_spark.pipeline.cli \
         --input /data/spans --output /data/clean \
-        --config default --buckets 16 --salt 64 [--nested] [--mode extract]
+        --config default [--buckets N] [--salt N] [--nested] [--mode extract]
 
 Reads a (doc_id, spans) parquet/json/csv input, sanitizes (or extracts the
 main content of) text spans, and writes every mode through
@@ -77,11 +77,13 @@ def main(argv: list[str] | None = None) -> int:
                          "fragments wrapped into single-span docs")
     ap.add_argument("--output", required=True)
     ap.add_argument("--config", default="default")
-    ap.add_argument("--buckets", type=int, default=16,
-                    help="doc_id-hash checkpoint buckets (resume granularity);"
-                         " 1 reads the input directly, without a staged copy")
-    ap.add_argument("--salt", type=int, default=64,
-                    help="salt buckets for the sanitize-stage shuffle")
+    ap.add_argument("--buckets", type=int,
+                    help="doc_id-hash checkpoint buckets (resume granularity;"
+                         " default: from the input size, or the resumed run's)"
+                         "; 1 reads the input directly, without a staged copy")
+    ap.add_argument("--salt", type=int,
+                    help="salt buckets for the exploded plan's shuffle"
+                         " (default: the session's default parallelism)")
     ap.add_argument("--nested", action="store_true",
                     help="sanitize mode: one pass per whole document, no"
                          " reassembly shuffles (for tame doc sizes; the"
@@ -107,8 +109,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--max-link-density", type=float, default=0.5,
                     help="extract mode: atomic-block link-density keep bar")
     args = ap.parse_args(argv)
-    if args.buckets < 1:
-        ap.error("--buckets must be at least 1")
+    for flag in ("buckets", "salt"):
+        if getattr(args, flag) is not None and getattr(args, flag) < 1:
+            ap.error(f"--{flag} must be at least 1")
     if args.mode == "extract":
         # sanitize-only flags are errors here, not silently ignored
         for flag in ("config", "on_error", "memoize", "nested"):

@@ -15,10 +15,7 @@ Exploded path (default — skew-proof):
       -> two-phase reassembly:
            groupBy(doc_id, _chunk) partial collect [SHUFFLE 2a — same key as
                                                    the salt, bounded group
-                                                   size; elided for free if
-                                                   Spark ever preserves
-                                                   partitioning through
-                                                   EvalPythonExec]
+                                                   size]
            groupBy(doc_id) merge + array_sort     [SHUFFLE 2b — one row per
                                                    doc; sort restores span
                                                    order by pos]
@@ -64,6 +61,17 @@ __all__ = [
 _CHUNK = 256
 
 
+def _salt(spark: SparkSession, salt_buckets: int | None) -> int:
+    """The document plans' salt: ``salt_buckets``, else one partition per
+    task slot. The (doc_id, _chunk) key already caps a task's share of any
+    document at _CHUNK spans, so more partitions than slots only add Python
+    tasks, each with a fixed worker cost, and AQE does not coalesce a
+    repartition that names its count."""
+    if salt_buckets is None:
+        return spark.sparkContext.defaultParallelism
+    return salt_buckets
+
+
 def explode_spans(df: DataFrame) -> DataFrame:
     """(doc_id, spans) -> (doc_id, pos, span); empty docs keep a null row."""
     return df.select("doc_id", F.posexplode_outer("spans").alias("pos", "span"))
@@ -80,24 +88,18 @@ def _rewrite_text_spans(
     replaces the text where ``applies``, and the ``extra`` columns are
     appended to the output row.
 
-    ``salt_buckets``: when set, repartitions by (doc_id, _chunk) where
+    ``salt_buckets``: unless None, repartitions by (doc_id, _chunk) where
     ``_chunk = pos div _CHUNK`` — a mega-document's chunks spread across
-    tasks before hitting Python (the skew defusal the north_rule requires;
-    per-task state from any one document is bounded by _CHUNK spans, the
-    same bound the reassembly's phase-1 group already imposes). r08 change
-    (guide §2.4 — key operations the same way so one exchange CAN be
-    shared): the salt key equals the reassembly's phase-1 group key. The
-    intended exchange elision does not fire yet — Spark 4.1's
-    EvalPythonExec drops outputPartitioning, so EnsureRequirements
-    re-shuffles above the Arrow UDF regardless (verified with a minimal
-    repro; OPTIMIZATION_r08.md) — but the aligned key measured ~15% on the
-    exploded leg on its own, the gate test_exploded_pipeline_exchange_budget
-    pins the <=3-exchange budget, and if upstream ever preserves
-    partitioning through Python nodes the third exchange disappears with no
-    further change here. The span's own row carries ``pos``, so order
-    needs no co-location.
+    tasks before hitting Python (the skew defusal the north_rule requires),
+    and a task holds at most _CHUNK spans of any one document. The key is
+    the reassembly's phase-1 group key, so if Spark ever preserves
+    partitioning through Python nodes (4.1's EvalPythonExec drops it;
+    OPTIMIZATION_r08.md) the phase-1 exchange disappears with no change
+    here; test_exploded_pipeline_exchange_budget pins the <=3-exchange
+    budget. The span's own row carries ``pos``, so order needs no
+    co-location.
     """
-    salted = bool(salt_buckets)
+    salted = salt_buckets is not None
     if salted:
         exploded = exploded.withColumn(
             "_chunk", (F.col("pos").cast("long") / F.lit(_CHUNK)).cast("long"),
@@ -130,13 +132,13 @@ def sanitize_exploded(
     memoize: int = 0, on_error: str = "raise",
 ) -> DataFrame:
     """Apply the sanitize UDF to text-kind spans of an exploded frame,
-    salted by (doc_id, _chunk) when ``salt_buckets`` is set (see
-    _rewrite_text_spans). Output is (doc_id, pos[, _chunk], span), plus a
-    ``span_error`` flag under a non-raise ``on_error`` (summed into the
-    document's n_span_errors by reassemble_spans): safe modes return
-    struct<text, err>, so the poison row is explicit, never a silent
-    pass-through. Span-for-span identical to the nested plan (tier-1
-    replay + sanitize_structure/span oracles)."""
+    salted by (doc_id, _chunk) unless ``salt_buckets`` is None (see
+    _rewrite_text_spans; reassemble_spans needs the salted frame). Output
+    is (doc_id, pos[, _chunk], span), plus a ``span_error`` flag under a
+    non-raise ``on_error`` (summed into the document's n_span_errors by
+    reassemble_spans): safe modes return struct<text, err>, so the poison
+    row is explicit, never a silent pass-through. Span-for-span identical
+    to the nested plan (tier-1 replay + sanitize_structure/span oracles)."""
     udf = make_sanitize_udf(settings, memoize=memoize, on_error=on_error)
 
     def rewrite(text, applies):
@@ -150,8 +152,8 @@ def sanitize_exploded(
 
 
 def reassemble_spans(clean: DataFrame) -> DataFrame:
-    """(doc_id, pos, span[, span_error]) -> (doc_id, spans[, n_span_errors])
-    with order restored by pos.
+    """(doc_id, pos, _chunk, span[, span_error]) -> (doc_id, spans[,
+    n_span_errors]) with order restored by pos.
 
     Two phases bound per-group aggregation state under mega-document
     skew: spans first collect per (doc_id, chunk) where chunk = pos div
@@ -165,27 +167,15 @@ def reassemble_spans(clean: DataFrame) -> DataFrame:
     (present exactly under a non-raise poison policy) is summed in both
     phases into the document's ``n_span_errors``.
 
-    When the incoming frame already carries a ``_chunk`` column (the
-    chunk-aligned salt _rewrite_text_spans applies since r08), phase 1
-    groups on that exact attribute — the same key the salt exchange
-    partitioned by. (The phase-1 exchange is not elided yet: Spark 4.1's
-    EvalPythonExec drops outputPartitioning, see _rewrite_text_spans; the
-    alignment still avoids any FOURTH shuffle and makes the elision
-    automatic if that upstream limitation lifts.)
+    Phase 1 groups on the salted frame's ``_chunk``, the salt exchange's
+    own key (see _rewrite_text_spans).
     """
     keyed = F.when(
         F.col("pos").isNotNull(),
         F.struct(F.col("pos").alias("pos"), F.col("span").alias("span")),
     )
-    chunk_key = (
-        F.col("_chunk")
-        if "_chunk" in clean.columns
-        else (F.col("pos").cast("long") / F.lit(_CHUNK))
-        .cast("long")
-        .alias("_chunk")
-    )
     n_err = "span_error" in clean.columns
-    partial = clean.groupBy("doc_id", chunk_key).agg(
+    partial = clean.groupBy("doc_id", "_chunk").agg(
         F.sort_array(F.collect_list(keyed)).alias("chunk_arr"),
         *([F.sum(F.col("span_error").cast("int")).alias("n_err")] if n_err else []),
     )
@@ -217,7 +207,7 @@ def sanitize_spans(
     df: DataFrame,
     settings=None,
     explode: bool = True,
-    salt_buckets: int | str | None = "auto",
+    salt_buckets: int | None = None,
     memoize: int = 0,
     on_error: str = "raise",
 ) -> DataFrame:
@@ -227,21 +217,18 @@ def sanitize_spans(
     ``n_span_errors`` column (poison spans per document) on every plan;
     under "raise" it is (doc_id, spans) alone.
 
-    ``salt_buckets="auto"`` sizes the salted shuffle to 4x the cluster's
-    default parallelism — enough granularity that AQE can rebalance and a
-    mega-document never owns a task, without drowning small jobs in tiny
-    tasks. Pass an int to pin it, or None to skip salting entirely.
+    ``salt_buckets``: the exploded plan's salted shuffle partitions; None
+    means the session's ``defaultParallelism`` (_salt).
     ``memoize``: per-worker output cache size for boilerplate-heavy
     corpora (see make_sanitize_udf).
     ``explode=True`` runs the exploded, chunk-salted plan that spreads a
     mega-document over tasks; ``explode=False`` runs the nested plan,
     ``sanitize_spans_arrow``. Both agree span for span."""
-    if salt_buckets == "auto":
-        salt_buckets = spark.sparkContext.defaultParallelism * 4
     if not explode:
         return sanitize_spans_arrow(df, settings, memoize=memoize,
                                     on_error=on_error)
-    clean = sanitize_exploded(explode_spans(df), settings, salt_buckets,
+    clean = sanitize_exploded(explode_spans(df), settings,
+                              _salt(spark, salt_buckets),
                               memoize=memoize, on_error=on_error)
     return reassemble_spans(clean)
 
@@ -251,7 +238,7 @@ def extract_spans(
     df: DataFrame,
     *,
     max_link_density: float = 0.5,
-    salt_buckets: int | str | None = "auto",
+    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Main-content extraction over interleaved (doc_id, spans) documents —
     the north rule's "main-content extraction pipeline" run on the SAME
@@ -262,13 +249,12 @@ def extract_spans(
     reassembly. Media-kind
     spans pass through byte-identical and in position; the span order
     contract is sanitize_spans' exactly (kind, media_ref, offset, order
-    preserved; text replaced by the extracted main content)."""
-    if salt_buckets == "auto":
-        salt_buckets = spark.sparkContext.defaultParallelism * 4
+    preserved; text replaced by the extracted main content).
+    ``salt_buckets`` as in sanitize_spans."""
     udf = make_extract_udf(max_link_density=max_link_density)
     return reassemble_spans(_rewrite_text_spans(
         explode_spans(df), lambda text, _: (udf(text)["main_text"], []),
-        salt_buckets,
+        _salt(spark, salt_buckets),
     ))
 
 

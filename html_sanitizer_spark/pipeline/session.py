@@ -31,23 +31,29 @@ def get_spark(
     JVMs (own heap, own GC, own Python workers) talking to the driver over
     the block/shuffle services, the closest single-host proxy to a
     multi-executor cluster and the shape the N->4N executor scaling
-    evidence runs on (bench.py --scaling-executors). Without
-    ``parallelism``, ``SPARK_GRAFT_CPUS`` sets the thread count, else the
-    process's CPU-affinity count."""
-    if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS",
-                                         len(os.sched_getaffinity(0))))
-    if executors is not None:
-        master = f"local-cluster[{executors},{executor_cores},{executor_mem_mb}]"
-        parallelism = executors * executor_cores
-    else:
-        master = f"local[{parallelism}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(parallelism, 2)
+    evidence runs on (bench.py --scaling-executors). With neither that nor
+    ``parallelism``, a driver that spark-submit started keeps the launch's
+    master and shuffle partitions; otherwise ``SPARK_GRAFT_CPUS`` sets the
+    thread count, else the process's CPU-affinity count."""
+    builder = SparkSession.builder.appName(app_name)
+    # only spark-submit's Python driver has this variable (its JVM's port)
+    if (parallelism, executors) != (None, None) or (
+            "PYSPARK_GATEWAY_PORT" not in os.environ):
+        if parallelism is None:
+            parallelism = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                             len(os.sched_getaffinity(0))))
+        if executors is not None:
+            builder = builder.master(f"local-cluster[{executors},"
+                                     f"{executor_cores},{executor_mem_mb}]")
+            parallelism = executors * executor_cores
+        else:
+            builder = builder.master(f"local[{parallelism}]")
+        shuffle_partitions = shuffle_partitions or max(parallelism, 2)
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions",
+                                 str(shuffle_partitions))
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder
         # pin event-time semantics: window()/date_trunc alignment must not
         # depend on the host's JVM timezone (and the DuckDB oracles replay
         # timestamps as naive UTC)

@@ -210,6 +210,64 @@ def test_rerun_is_idempotent(spark, tmp_path):
     assert _collect_sorted(read_checkpointed(spark, out)) == before
 
 
+def test_small_input_runs_one_bucket(spark, tmp_path, monkeypatch):
+    """Without a count, an input under ``_BUCKET_BYTES`` runs as one bucket,
+    read directly with no staged copy, and its rerun rewrites nothing."""
+    in_dir = str(tmp_path / "in")
+    synth_spans_df(spark, 40, seed=9, mega_every=0).write.parquet(in_dir)
+    df = spark.read.parquet(in_dir)
+
+    def no_staging(*args):
+        raise AssertionError("a one-bucket run staged its input")
+
+    monkeypatch.setattr(checkpoint, "_stage_bucketed", no_staging)
+    out = str(tmp_path / "out")
+    run = run_checkpointed(spark, df, out)
+    assert run.done == [0] and _manifest(out)["n_buckets"] == 1
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    assert read_checkpointed(spark, out).count() == 40
+
+    def snapshot():
+        return {name: open(os.path.join(out, "bucket=0", name), "rb").read()
+                for name in os.listdir(os.path.join(out, "bucket=0"))}
+
+    manifest, written = _manifest(out), snapshot()
+    assert run_checkpointed(spark, df, out).done == [0]
+    assert _manifest(out) == manifest and snapshot() == written
+
+
+def test_derived_bucket_count_resumes_from_manifest(spark, tmp_path,
+                                                    monkeypatch):
+    """An input over ``_BUCKET_BYTES`` gets more than one bucket; a resume
+    with no count takes the manifest's count (whatever the rule would
+    derive now) and matches an uninterrupted run, and an explicit count
+    that differs still refuses."""
+    in_dir = str(tmp_path / "in")
+    synth_spans_df(spark, 120, seed=5, mega_every=0).write.parquet(in_dir)
+    df = spark.read.parquet(in_dir)
+    _, size = checkpoint._input_identity(spark, df)
+    monkeypatch.setattr(checkpoint, "_BUCKET_BYTES", size // 3)
+
+    full_dir = str(tmp_path / "full")
+    n = run_checkpointed(spark, df, full_dir).n_buckets
+    assert n > 1
+
+    out = str(tmp_path / "crash")
+    _crash_after_commits(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, df, out)
+    monkeypatch.undo()  # the rule now derives one bucket for this input
+    assert _manifest(out)["n_buckets"] == n and len(_manifest(out)["done"]) == 1
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_checkpointed(spark, df, out, n_buckets=1)
+
+    run = run_checkpointed(spark, df, out)
+    assert run.n_buckets == n and run.done == list(range(n))
+    assert (_collect_sorted(read_checkpointed(spark, out))
+            == _collect_sorted(read_checkpointed(spark, full_dir)))
+    assert _manifest(out)["lineage"] == _manifest(full_dir)["lineage"]
+
+
 def test_config_drift_refused(spark, tmp_path):
     df = synth_spans_df(spark, 10, seed=2, mega_every=0)
     out = str(tmp_path / "out")

@@ -5,6 +5,8 @@ whole-stage codegen on the JVM-side operators."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -102,8 +104,12 @@ def test_salted_exchange_feeds_python_stage(spark):
     assert "hashpartitioning(doc_id" in plan and "_chunk" in plan, plan
 
 
-@pytest.mark.parametrize("plan", ["sanitize_spans", "extract_spans"])
-def test_exploded_pipeline_exchange_budget(spark, plan):
+@pytest.mark.parametrize("plan, salt", [
+    ("sanitize_spans", 16), ("extract_spans", 16),
+    ("sanitize_spans", None), ("extract_spans", None),
+], ids=["sanitize_spans", "extract_spans",
+        "sanitize_spans-no-salt", "extract_spans-no-salt"])
+def test_exploded_pipeline_exchange_budget(spark, plan, salt):
     """r08 exchange-budget gate (guide §2.4): the full exploded pipeline
     is exactly THREE hash exchanges — chunk salt, phase-1 (doc_id, _chunk)
     collect, per-doc merge — and the salt keys EQUAL the phase-1 group
@@ -113,18 +119,21 @@ def test_exploded_pipeline_exchange_budget(spark, plan):
     if that ever changes upstream, this count drops to 2 for free because
     the keys already line up. A 4th exchange appearing means a regression
     (e.g. someone re-keyed the salt away from the reassembly chunks).
-    extract_spans runs on the same topology and shares the budget."""
+    extract_spans runs on the same topology and shares the budget. With no
+    salt given, the salt exchange has one partition per task slot."""
     from html_sanitizer_spark.pipeline import job
 
     df = spans_from_documents(spark, SF)
     if plan == "sanitize_spans":
-        out = job.sanitize_spans(spark, df, explode=True, salt_buckets=16)
+        out = job.sanitize_spans(spark, df, explode=True, salt_buckets=salt)
     else:
-        out = job.extract_spans(spark, df, salt_buckets=16)
+        out = job.extract_spans(spark, df, salt_buckets=salt)
     plan = _plan(out)
     assert plan.count("Exchange hashpartitioning") <= 3, plan
     # the salt exchange and the phase-1 aggregate share the same key pair
-    assert "_chunk" in plan, plan
+    want = salt or spark.sparkContext.defaultParallelism
+    assert re.search(r"hashpartitioning\(doc_id#\d+, _chunk#\d+L?, "
+                     rf"{want}\), REPARTITION_BY_NUM", plan), plan
 
 
 def test_wholestage_codegen_on_jvm_operators(spark):

@@ -164,13 +164,16 @@ def test_cli_smoke_every_mode(spark, tmp_path, flags):
     ["--mode", "extract", "--config", "nofollow"],
     ["--mode", "extract", "--memoize", "64"],
     ["--mode", "extract", "--nested"],
-    ["--buckets", "0"], ["--buckets", "-1"],
-], ids=["on-error", "config", "memoize", "nested", "buckets-0", "buckets-neg"])
+    ["--buckets", "0"], ["--buckets", "-1"], ["--salt", "0"], ["--salt", "-1"],
+], ids=["on-error", "config", "memoize", "nested", "buckets-0", "buckets-neg",
+        "salt-0", "salt-neg"])
 def test_cli_extract_rejects_poison_policy(spark, tmp_path, flag):
     """Flags the CLI cannot honour are errors, not silently ignored:
-    extraction has no poison policy, config, memo or nested plan, and a
-    run needs at least one bucket (fewer would write no data, lineage or
-    manifest and still exit 0). The input is a real one-document table,
+    extraction has no poison policy, config, memo or nested plan, a run
+    needs at least one bucket (fewer would write no data, lineage or
+    manifest and still exit 0), and a salt of 0 would run unsalted (a
+    mega-document on one task) while a negative one fails inside Spark,
+    after the input is staged. The input is a real one-document table,
     so only the flag can make the run fail."""
     from html_sanitizer_spark.pipeline.cli import main
     from html_sanitizer_spark.pipeline.synth import synth_spans_df
