@@ -64,28 +64,21 @@ def normalize_overall_whitespace(html: str, settings: Settings) -> str:
 
 def _normalize_node_ws(el: Element, settings: Settings) -> None:
     """F3 + P5 on one node's text/tail (sanitizer.py:122-150). Control chars
-    are always filtered; whitespace collapse runs to fixpoint and is skipped
-    under keep_typographic_whitespace."""
+    are always filtered; whitespace collapse is skipped under
+    keep_typographic_whitespace. One ``whitespace_re`` sub reaches the
+    reference's fixpoint: it turns every maximal run of the class into one
+    space, a space is in both classes, and the runs stay apart."""
     if el.text and _CONTROL_RE.search(el.text):
         el.text = _CONTROL_RE.sub("", el.text)
     if el.tail and _CONTROL_RE.search(el.tail):
         el.tail = _CONTROL_RE.sub("", el.tail)
     if settings.keep_typographic_whitespace:
         return
-    dirty = settings.ws_dirty_re.search
     ws_re = settings.whitespace_re
-    if el.text and dirty(el.text):
-        while True:
-            collapsed = ws_re.sub(" ", el.text)
-            if collapsed == el.text:
-                break
-            el.text = collapsed
-    if el.tail and dirty(el.tail):
-        while True:
-            collapsed = ws_re.sub(" ", el.tail)
-            if collapsed == el.tail:
-                break
-            el.tail = collapsed
+    if el.text:
+        el.text = ws_re.sub(" ", el.text)
+    if el.tail:
+        el.tail = ws_re.sub(" ", el.tail)
 
 
 def _doc_root(fragment_root: Element) -> Element:
@@ -142,6 +135,19 @@ def sanitize(html: str, settings: Settings | str | None = None) -> str:
     # Equality with the tree path is pinned by tests/test_fuzz.py's
     # test_plain_fast_path_matches_tree_path and the sanitize_text_plain
     # DuckDB oracle replays the same reduction end-to-end in SQL.
+    #
+    # Clean text is a fixed point of this path. Call a fragment clean when
+    # it is printable ASCII (0x20-0x7e) with no '<', '>' or '&' and no
+    # double space. Then sanitize returns it unchanged, whatever the
+    # settings, as long as autolink is off:
+    #   - NFKC and NFC leave ASCII unchanged, so no markup char appears;
+    #   - with no '\xa0', '\n', '\r' or '&', none of _WS_LITERALS matches;
+    #   - its only whitespace is single spaces, and a single space is a
+    #     fixed point of whitespace_re.sub(" ", ...) in both classes;
+    #   - it has no control chars, so the \r and _CONTROL_RE subs are
+    #     no-ops.
+    # functions/udfs.py's batch kernel relies on this: it marks clean spans
+    # in Arrow and never hands them to sanitize.
     if (
         settings.autolink is not True
         and not isinstance(settings.autolink, dict)

@@ -96,7 +96,6 @@ class Settings:
         "is_mergeable",
         "_ws_re",
         "_only_ws_re",
-        "_ws_dirty_re",
     )
 
     def __init__(self, overrides: dict | None = None):
@@ -121,7 +120,6 @@ class Settings:
         self.is_mergeable = merged.get("is_mergeable") or (lambda e1, e2: True)
         self._ws_re = None
         self._only_ws_re = None
-        self._ws_dirty_re = None
 
         # --- validation (sanitizer.py:226-250) ---
         if not self.tags:
@@ -163,17 +161,6 @@ class Settings:
             self._only_ws_re = re.compile("^" + self._ws_class() + "*$")
         return self._only_ws_re
 
-    @property
-    def ws_dirty_re(self):
-        """Matches iff ``whitespace_re.sub(" ", s)`` would change ``s``:
-        a collapsible run of length >= 2, or a single collapsible char that
-        is not a plain space. Cheap C-level pre-test that skips the sub on
-        already-normalized text (the overwhelmingly common case)."""
-        if self._ws_dirty_re is None:
-            cls = self._ws_class()
-            self._ws_dirty_re = re.compile(f"(?:{cls}){{2}}|(?={cls})[^ ]")
-        return self._ws_dirty_re
-
     def _ws_class(self) -> str:
         if self.keep_typographic_whitespace:
             return "[^\\S%s]" % TYPOGRAPHIC_WHITESPACE
@@ -183,7 +170,7 @@ class Settings:
         return {
             k: getattr(self, k)
             for k in self.__slots__
-            if k not in ("_ws_re", "_only_ws_re", "_ws_dirty_re")
+            if k not in ("_ws_re", "_only_ws_re")
         }
 
     def __setstate__(self, state):
@@ -191,7 +178,6 @@ class Settings:
             object.__setattr__(self, k, v)
         self._ws_re = None
         self._only_ws_re = None
-        self._ws_dirty_re = None
 
 
 def _defaults() -> dict:

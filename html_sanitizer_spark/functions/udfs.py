@@ -2,14 +2,16 @@
 
 Design (SURVEY.md §2.10, §4.1): the whole tree engine is fused into ONE
 Arrow-batched hop per plan so each row crosses the Arrow boundary exactly
-once. Batches arrive as Arrow arrays; the per-value work (parse, walk,
-serialize) runs in a tight loop over the batch, amortizing settings/regex
-setup which lives in module/executor scope. Per-row Python UDFs are never
-used (north_rule requirement).
+once. Per-row Python UDFs are never used (north_rule requirement).
 
-One kernel, one shape per plan: ``_make_text_kernel`` sanitizes a single
-fragment and owns the memo and the poison policy; every UDF below calls it.
-- ``make_sanitize_udf``    — scalar pandas UDF over a text column, for the
+One Arrow batch kernel, ``_make_batch_kernel``: a string array plus an
+apply mask in, the new strings and the error positions out. It marks the
+spans ``sanitize`` returns unchanged (printable ASCII with no ``<``, ``>``,
+``&`` or double space) with ``pyarrow.compute``, so only the other spans
+become Python strings; those run ``_make_text_kernel``, which sanitizes
+one fragment and owns the memo and the poison policy. Both UDF shapes call
+the batch kernel:
+- ``make_sanitize_udf``    — scalar Arrow UDF over a text column, for the
   exploded span plan (Catalyst sees a deterministic expression).
 - ``sanitize_spans_arrow`` — ``mapInArrow`` over whole (doc_id, spans)
   documents, for the nested zero-extra-shuffle plan: sanitizes text-kind
@@ -19,7 +21,10 @@ fragment and owns the memo and the poison policy; every UDF below calls it.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -56,7 +61,7 @@ SAFE_RESULT_TYPE = T.StructType(
 
 
 def make_sanitize_udf(settings=None, memoize: int = 0, on_error: str = "raise"):
-    """Scalar pandas UDF: sanitize a batch of HTML fragments.
+    """Scalar Arrow UDF: sanitize a batch of HTML fragments.
 
     ``settings`` may be a Settings instance or a registered config name;
     it is captured in the closure and shipped once per executor (the
@@ -79,16 +84,18 @@ def make_sanitize_udf(settings=None, memoize: int = 0, on_error: str = "raise"):
       - "null":  null the text with err=true (drops the content, keeps the
         span slot).
     """
-    kernel = _make_text_kernel(settings, memoize, on_error)
+    kernel = _make_batch_kernel(settings, memoize, on_error)
     safe = on_error != "raise"
 
-    @F.pandas_udf(SAFE_RESULT_TYPE if safe else T.StringType())
-    def sanitize_batch(texts: pd.Series) -> pd.Series:  # DataFrame if safe
-        res = [(None, False) if t is None else kernel(t) for t in texts]
-        text = pd.Series([r[0] for r in res], dtype="object")
+    @F.arrow_udf(SAFE_RESULT_TYPE if safe else T.StringType())
+    def sanitize_batch(texts: pa.Array) -> pa.Array:
+        text, errors = kernel(texts)
         if not safe:
             return text
-        return pd.DataFrame({"text": text, "err": [r[1] for r in res]})
+        err = np.zeros(len(texts), dtype=bool)
+        err[errors] = True
+        return pa.StructArray.from_arrays([text, pa.array(err)],
+                                          names=["text", "err"])
 
     return sanitize_batch
 
@@ -123,8 +130,8 @@ def _worker_cache(memo_key: tuple) -> dict:
 
 
 def _make_text_kernel(settings, memoize: int, on_error: str):
-    """Per-fragment sanitize kernel shared by both UDF shapes (exploded
-    scalar, nested arrow): the one place that validates ``on_error`` and
+    """Per-fragment sanitize kernel behind ``_make_batch_kernel``, for the
+    spans it sends to Python: the one place that validates ``on_error`` and
     implements the memo (per-worker bounded cache keyed by a deterministic
     config+policy fingerprint, ADVICE r02) and the poison policy (keep/null
     with an explicit error flag, never a silent pass-through). Returns
@@ -160,23 +167,68 @@ def _make_text_kernel(settings, memoize: int, on_error: str):
     return run
 
 
+def _clean_mask(texts):
+    """True where ``sanitize`` returns the text unchanged under any settings
+    without autolink (null where the text is null): printable ASCII (which
+    rejects every byte >= 0x80, so it implies ASCII) with no ``<``, ``>``
+    or ``&`` and no double space. The identity is argued beside the
+    engine's markup-free fast path (engine/core.py, ``sanitize``)."""
+    return pc.and_not(pc.ascii_is_printable(texts),
+                      pc.match_substring_regex(texts, "[<>&]|  "))
+
+
+def _make_batch_kernel(settings, memoize: int, on_error: str):
+    """The Arrow batch kernel both UDF shapes call:
+    ``run(texts, apply=None) -> (new_texts, error_positions)``.
+
+    ``texts`` is a string array and ``apply`` an optional boolean mask of
+    the same length (null counts as false); null texts and unapplied
+    positions come back unchanged. Of the rest, the spans ``sanitize``
+    returns unchanged are marked in Arrow (``_clean_mask``); like the
+    engine's fast path, the mark is off when ``settings.autolink`` is True
+    or a dict. Only the remaining spans become Python strings and run
+    ``_make_text_kernel`` (memo and poison policy included); their results
+    are scattered back with ``replace_with_mask``. ``error_positions`` are
+    the ascending indices of spans whose sanitize raised under a non-raise
+    ``on_error``."""
+    kernel = _make_text_kernel(settings, memoize, on_error)
+    autolink = settings_for(settings).autolink
+    mark_clean = autolink is not True and not isinstance(autolink, dict)
+
+    def run(texts, apply=None):
+        todo = texts.is_valid()
+        if apply is not None:
+            todo = pc.and_(todo, pc.fill_null(apply, False))
+        if mark_clean:
+            todo = pc.and_not(todo, pc.fill_null(_clean_mask(texts), False))
+        idx = pc.indices_nonzero(todo)
+        if not len(idx):
+            return texts, []
+        results = [kernel(t) for t in texts.take(idx).to_pylist()]
+        new = pa.array([r[0] for r in results], texts.type)
+        errors = [i for i, r in zip(idx.to_pylist(), results) if r[1]]
+        return pc.replace_with_mask(texts, todo, new), errors
+
+    return run
+
+
 def sanitize_spans_arrow(
     df, settings=None, memoize: int = 0, on_error: str = "raise",
 ):
     """Nested zero-extra-shuffle path via ``mapInArrow`` (SURVEY.md §2.10):
-    operates on pyarrow RecordBatches directly — the flattened struct
-    children are rebuilt column-wise (only the ``text`` child is touched),
-    with no per-row dict conversion.
+    operates on pyarrow RecordBatches directly — the flattened ``text``
+    child of every document's spans goes through the batch kernel in one
+    call, with ``apply = kind == 'text'``, and the struct and list are
+    rebuilt around it with no per-row conversion.
 
     ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8):
     keep/null are applied per span, and a non-"raise" policy appends an
     ``n_span_errors`` int column — the per-document poison count, computed
-    from the list offsets — the same column the exploded plan's
-    reassembly carries (filter n_span_errors > 0 → quarantine table).
+    from the error positions and the list offsets — the same column the
+    exploded plan's reassembly carries (filter n_span_errors > 0 →
+    quarantine table).
     """
-    import pyarrow as pa
-
-    kernel = _make_text_kernel(settings, memoize, on_error)
+    kernel = _make_batch_kernel(settings, memoize, on_error)
     with_errors = on_error != "raise"
     schema = df.schema
     if with_errors:
@@ -186,66 +238,47 @@ def sanitize_spans_arrow(
 
     def fix_batches(batches):
         for batch in batches:
-            names = batch.schema.names
-            idx = names.index("spans")
-            lst = batch.column(idx)
-            if isinstance(lst, pa.ChunkedArray):  # defensive; batches are flat
-                lst = lst.combine_chunks()
-            values = lst.values  # flattened StructArray (absolute offsets)
-            kinds = values.field("kind")
-            texts = values.field("text")
-            new_text = []
-            elem_err = []
-            for k, t in zip(kinds.to_pylist(), texts.to_pylist()):
-                if k == "text" and t is not None:
-                    clean, err = kernel(t)
-                else:
-                    clean, err = t, False
-                new_text.append(clean)
-                elem_err.append(err)
-            # carry the element-level validity through the rebuild: without
-            # the mask a null span element would come back as a non-null
-            # struct of null fields (ADVICE r02), diverging from the input
-            # and from the exploded path
-            elem_mask = (
-                pa.compute.is_null(values) if values.null_count else None
-            )
-            new_values = pa.StructArray.from_arrays(
-                [
-                    values.field("kind"),
-                    pa.array(new_text, pa.string()),
-                    values.field("media_ref"),
-                    values.field("offset"),
-                ],
-                names=["kind", "text", "media_ref", "offset"],
-                mask=elem_mask,
-            )
-            null_mask = lst.is_null() if lst.null_count else None
-            new_list = pa.ListArray.from_arrays(
-                lst.offsets, new_values, mask=null_mask
-            )
-            arrays = [
-                new_list if i == idx else batch.column(i)
-                for i in range(batch.num_columns)
-            ]
-            out_names = list(names)
-            if with_errors:
-                # per-document poison count from the list offsets: row i
-                # owns flattened elements [off[i], off[i+1])
-                prefix = [0]
-                for e in elem_err:
-                    prefix.append(prefix[-1] + int(e))
-                offs = lst.offsets.to_pylist()
-                valid = lst.is_valid().to_pylist()
-                counts = [
-                    prefix[offs[i + 1]] - prefix[offs[i]] if valid[i] else None
-                    for i in range(len(lst))
-                ]
-                arrays.append(pa.array(counts, pa.int32()))
-                out_names.append("n_span_errors")
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+            yield _sanitize_documents(batch, kernel, with_errors)
 
     return df.mapInArrow(fix_batches, schema)
+
+
+def _sanitize_documents(batch, kernel, with_errors: bool):
+    """One (doc_id, spans) RecordBatch through the batch ``kernel``
+    (``_make_batch_kernel``), for ``sanitize_spans_arrow``."""
+    idx = batch.schema.get_field_index("spans")
+    lst = batch.column(idx)
+    # this batch's spans only: a sliced list's ``values`` holds its
+    # parent's spans too, so rebase the offsets onto its own range
+    start = lst.offsets[0]
+    offsets = pc.subtract(lst.offsets, start)
+    values = lst.values.slice(start.as_py(), offsets[-1].as_py())
+    valid = values.is_valid()
+    apply = pc.and_(pc.equal(values.field("kind"), "text"), valid)
+    text, errors = kernel(values.field("text"), apply)
+    # carry the element-level validity through the rebuild: without the
+    # mask a null span element would come back as a non-null struct of
+    # null fields (ADVICE r02), diverging from the input and from the
+    # exploded path
+    new_values = pa.StructArray.from_arrays(
+        [values.field("kind"), text, values.field("media_ref"),
+         values.field("offset")],
+        names=["kind", "text", "media_ref", "offset"],
+        mask=pc.invert(valid) if values.null_count else None,
+    )
+    arrays = batch.columns
+    arrays[idx] = type(lst).from_arrays(
+        offsets, new_values, mask=lst.is_null() if lst.null_count else None)
+    names = batch.schema.names
+    if with_errors:
+        # row i owns the spans [offsets[i], offsets[i+1])
+        bounds = np.searchsorted(errors, offsets.to_numpy())
+        arrays.append(pa.array(
+            np.diff(bounds), pa.int32(),
+            mask=lst.is_null().to_numpy(zero_copy_only=False),
+        ))
+        names = names + ["n_span_errors"]
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 # main-content extraction result: kept-block text + block accounting, so

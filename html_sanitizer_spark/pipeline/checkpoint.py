@@ -44,6 +44,9 @@ Protocol:
 - A bucket is processed with overwrite semantics (re-running a
   half-written bucket is safe) and only then recorded, with its lineage,
   in the manifest; the manifest rename is the commit point.
+- A new run (no manifest) first deletes the ``bucket=<k>`` and
+  ``_quarantine`` directories a crashed run left: none was committed, and
+  a run with fewer buckets would not overwrite them all.
 - Resume = skip buckets already in the manifest (the left-anti-join of
   SURVEY.md §2.3 J3, done driver-side on bucket ids since the manifest is
   tiny). Staging carries its own commit marker (same atomic-rename
@@ -104,10 +107,12 @@ def _input_identity(spark: SparkSession, df: DataFrame) -> tuple[str, int]:
         return str(df.semanticHash()), 0
     # through Hadoop's FileSystem, so any scheme the read used works
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm = spark.sparkContext._jvm
     stats = []
     for uri in files:
-        path = hadoop_path(uri)
+        # from a java.net.URI: inputFiles() percent-encodes (a space is
+        # %20), and Path(String) would not decode it
+        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(uri))
         st = path.getFileSystem(conf).getFileStatus(path)
         stats.append([uri, st.getLen(), st.getModificationTime()])
     return (hashlib.sha256(json.dumps(stats).encode()).hexdigest()[:16],
@@ -171,6 +176,12 @@ class CheckpointedRun:
         path = os.path.join(out_dir, MANIFEST_NAME)
         if not os.path.exists(path):
             os.makedirs(out_dir, exist_ok=True)
+            # with no manifest nothing here was committed: drop the output
+            # a crashed run left, or read_checkpointed would read it too.
+            # A staged copy stays: its marker guards its reuse.
+            for name in os.listdir(out_dir):
+                if name.startswith("bucket=") or name == "_quarantine":
+                    shutil.rmtree(os.path.join(out_dir, name))
             if n_buckets is None:
                 n_buckets = max(1, math.ceil(input_bytes / _BUCKET_BYTES))
             return cls(out_dir, n_buckets, fingerprint, input_id,
@@ -328,10 +339,11 @@ def run_checkpointed(
             # and never committed
             spark.sparkContext.cancelJobsWithTag(tag)
             raise
-    if staging is not None and len(run.done) == n_buckets:
-        # every bucket committed: the staged copy is dead weight, drop it
-        # (an Iceberg bucket partition spec has no copy to drop)
-        shutil.rmtree(staging, ignore_errors=True)
+    if len(run.done) == n_buckets:
+        # every bucket committed: a staged copy (this run's, or one a
+        # crashed run with another bucket count left) is dead weight, drop
+        # it (an Iceberg bucket partition spec has no copy to drop)
+        shutil.rmtree(os.path.join(out_dir, STAGING_DIR), ignore_errors=True)
     return run
 
 

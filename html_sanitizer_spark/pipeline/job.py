@@ -142,7 +142,9 @@ def sanitize_exploded(
     udf = make_sanitize_udf(settings, memoize=memoize, on_error=on_error)
 
     def rewrite(text, applies):
-        res = udf(text)
+        # null where the span is not text-kind: Spark evaluates the UDF on
+        # every row whatever the CASE around it, and the kernel skips nulls
+        res = udf(F.when(applies, text))
         if on_error == "raise":
             return res, []
         err = F.when(applies, F.coalesce(res["err"], F.lit(False)))

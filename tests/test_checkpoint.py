@@ -268,6 +268,51 @@ def test_derived_bucket_count_resumes_from_manifest(spark, tmp_path,
     assert _manifest(out)["lineage"] == _manifest(full_dir)["lineage"]
 
 
+@pytest.mark.parametrize("rerun", ["one-bucket", "cli-derived"])
+def test_new_run_drops_uncommitted_buckets(spark, tmp_path, monkeypatch,
+                                           rerun):
+    """A 2-bucket run that crashes in its first manifest commit leaves
+    ``bucket=0``, ``bucket=1`` and a staged copy, none of them committed. A
+    new one-bucket run (explicit, or the CLI's derived count) writes only
+    ``bucket=0``: its output must equal a fresh run's, not also hold the
+    stale ``bucket=1``."""
+    in_dir = str(tmp_path / "in")
+    synth_spans_df(spark, 40, seed=3, mega_every=0).write.parquet(in_dir)
+    df = spark.read.parquet(in_dir)
+    fresh = str(tmp_path / "fresh")
+    run_checkpointed(spark, df, fresh, n_buckets=1)
+
+    out = str(tmp_path / "out")
+
+    def commit(self, bucket):
+        # fail only once both buckets' data has landed
+        deadline = time.monotonic() + 120
+        while not all(os.path.exists(os.path.join(out, f"bucket={b}",
+                                                  "_SUCCESS"))
+                      for b in (0, 1)):
+            assert time.monotonic() < deadline, os.listdir(out)
+            time.sleep(0.05)
+        raise RuntimeError("injected failure in manifest commit")
+
+    monkeypatch.setattr(CheckpointedRun, "commit_bucket", commit)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, df, out, n_buckets=2)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(out, MANIFEST_NAME))
+    assert {"bucket=0", "bucket=1", "_staging"} <= set(os.listdir(out))
+
+    if rerun == "one-bucket":
+        run_checkpointed(spark, df, out, n_buckets=1)
+    else:
+        from html_sanitizer_spark.pipeline.cli import main
+
+        assert main(["--input", in_dir, "--output", out]) == 0
+    assert sorted(os.listdir(out)) == [MANIFEST_NAME, "bucket=0"]
+    assert (_collect_sorted(read_checkpointed(spark, out))
+            == _collect_sorted(read_checkpointed(spark, fresh)))
+    assert _manifest(out)["lineage"] == _manifest(fresh)["lineage"]
+
+
 def test_config_drift_refused(spark, tmp_path):
     df = synth_spans_df(spark, 10, seed=2, mega_every=0)
     out = str(tmp_path / "out")

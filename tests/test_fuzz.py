@@ -10,7 +10,7 @@ import re
 from hypothesis import given, settings as hsettings, strategies as st
 
 from html_sanitizer_spark.engine.core import sanitize
-from html_sanitizer_spark.engine.settings import Settings
+from html_sanitizer_spark.engine.settings import TYPOGRAPHIC_WHITESPACE, Settings
 
 _SETTINGS = Settings()
 _ALLOWED = _SETTINGS.tags
@@ -324,3 +324,18 @@ def test_unwrap_marker_empty_cascade_is_a_reference_artifact():
     three = sanitize(two, _SETTINGS)
     assert three == ""
     assert sanitize(three, _SETTINGS) == ""
+
+
+@given(
+    st.text(alphabet=" \t\n\r\x0b\x0c\x1c\x1f\x85\u200b\u2028\u3000ab"
+            + TYPOGRAPHIC_WHITESPACE, max_size=80),
+    st.booleans(),
+)
+@hsettings(max_examples=300, deadline=None)
+def test_whitespace_collapse_is_idempotent(text, typographic):
+    """One ``whitespace_re`` sub reaches the fixpoint the reference loops
+    to, under both whitespace classes: ``_normalize_node_ws`` runs it
+    once."""
+    ws_re = Settings({"keep_typographic_whitespace": typographic}).whitespace_re
+    once = ws_re.sub(" ", text)
+    assert ws_re.sub(" ", once) == once, (text, once)

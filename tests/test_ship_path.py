@@ -56,6 +56,33 @@ def test_spark_submit_py_files(spark, tmp_path):
     assert got.count() == 30
 
 
+def test_cli_input_path_with_space_and_percent(spark, tmp_path):
+    """``inputFiles()`` percent-encodes a space (and a '%'): the input
+    identity must decode it to find the files. The run completes, and its
+    rerun into the same output is a no-op."""
+    from html_sanitizer_spark.pipeline.cli import main
+    from html_sanitizer_spark.pipeline.synth import synth_spans_df
+
+    in_dir = str(tmp_path / "my docs%1")
+    synth_spans_df(spark, 10, seed=1, mega_every=0).write.parquet(in_dir)
+    out = str(tmp_path / "out")
+    manifest = os.path.join(out, "_sanitize_manifest.json")
+
+    def state():
+        files = sorted(
+            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, names in os.walk(out) for f in names
+        )
+        with open(manifest) as fh:
+            return json.load(fh), files
+
+    assert main(["--input", in_dir, "--output", out]) == 0
+    first = state()
+    assert sum(row["n_docs"] for row in first[0]["lineage"].values()) == 10
+    assert main(["--input", in_dir, "--output", out]) == 0
+    assert state() == first
+
+
 def test_cli_json_and_csv_sources(spark, tmp_path):
     """r05 source formats: the CLI reads schema-enforced JSON span docs
     and flat doc_id,text CSV fragments (wrapped into single-span docs —
