@@ -17,12 +17,13 @@ the batch kernel:
   documents, for the nested zero-extra-shuffle plan: sanitizes text-kind
   spans inside the array, passes media spans through byte-identical,
   preserving order trivially.
+
+``make_extract_udf`` (main-content extraction) is a scalar Arrow UDF too.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import functions as F
@@ -294,33 +295,26 @@ EXTRACT_RESULT_TYPE = T.StructType(
 
 
 def make_extract_udf(max_link_density: float = 0.5):
-    """Scalar pandas UDF: main-content extraction (boilerplate strip via
+    """Scalar Arrow UDF: main-content extraction (boilerplate strip via
     DOM heuristics — engine/extract.py) over a batch of HTML fragments.
     Returns struct<main_text, n_kept, n_dropped> (kept blocks joined by
-    newlines); null in, null out.
+    newlines); null in, null fields out.
     Thresholds are captured in the closure (broadcast-by-closure, same
     pattern as make_sanitize_udf)."""
     from ..engine.extract import extract_main_blocks
 
-    @F.pandas_udf(EXTRACT_RESULT_TYPE)
-    def extract_batch(html: pd.Series) -> pd.DataFrame:
-        texts: list = []
-        kept_n: list = []
-        drop_n: list = []
-        for h in html:
-            if h is None:
-                texts.append(None)
-                kept_n.append(None)
-                drop_n.append(None)
-                continue
-            kept, dropped = extract_main_blocks(
-                h, max_link_density=max_link_density
-            )
-            texts.append("\n".join(kept))
-            kept_n.append(len(kept))
-            drop_n.append(dropped)
-        return pd.DataFrame(
-            {"main_text": texts, "n_kept": kept_n, "n_dropped": drop_n}
-        )
+    arrow_type = pa.struct([("main_text", pa.string()),
+                            ("n_kept", pa.int32()), ("n_dropped", pa.int32())])
+
+    def extract_one(h):
+        if h is None:
+            return {"main_text": None, "n_kept": None, "n_dropped": None}
+        kept, dropped = extract_main_blocks(h, max_link_density=max_link_density)
+        return {"main_text": "\n".join(kept), "n_kept": len(kept),
+                "n_dropped": dropped}
+
+    @F.arrow_udf(EXTRACT_RESULT_TYPE)
+    def extract_batch(html: pa.Array) -> pa.Array:
+        return pa.array([extract_one(h) for h in html.to_pylist()], arrow_type)
 
     return extract_batch

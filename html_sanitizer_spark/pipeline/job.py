@@ -12,12 +12,11 @@ Exploded path (default — skew-proof):
                                                    spans per doc per task]
       -> sanitize_udf on text-kind spans          [the only JVM<->Python
                                                    Arrow hop]
-      -> two-phase reassembly:
-           groupBy(doc_id, _chunk) partial collect [SHUFFLE 2a — same key as
-                                                   the salt, bounded group
-                                                   size]
-           groupBy(doc_id) merge + array_sort     [SHUFFLE 2b — one row per
-                                                   doc; sort restores span
+      -> groupBy(doc_id) collect_list of          [SHUFFLE 2 — one row per
+         (pos, span), sort_array                   doc; the partial collect
+                                                   runs in each map task
+                                                   before the exchange, and
+                                                   the sort restores span
                                                    order by pos]
 
 Nested path (``explode=False``): one ``mapInArrow`` pass over whole
@@ -55,9 +54,10 @@ __all__ = [
     "lineage_metrics",
 ]
 
-# spans per (doc_id, _chunk) group: the salt key of the sanitize stage AND
-# the phase-1 group key of the reassembly — one constant, so the two can
-# never drift apart
+# spans per (doc_id, _chunk) salt key: the most spans of any one document
+# a sanitize task holds. The reassembly does not read _chunk; it stays in
+# sanitize_exploded's output because it is the salt exchange's key, which
+# perfbench's salt-shuffle prefix plan selects
 _CHUNK = 256
 
 
@@ -73,8 +73,16 @@ def _salt(spark: SparkSession, salt_buckets: int | None) -> int:
 
 
 def explode_spans(df: DataFrame) -> DataFrame:
-    """(doc_id, spans) -> (doc_id, pos, span); empty docs keep a null row."""
-    return df.select("doc_id", F.posexplode_outer("spans").alias("pos", "span"))
+    """(doc_id, spans) -> (doc_id, pos, span, _null_spans). A document with
+    an empty or null spans array keeps one row with a null pos and span;
+    ``_null_spans`` marks the null array, so reassemble_spans can give it
+    back as null."""
+    # the marker is projected before the generator, so that no exploded
+    # row carries its whole spans array into the Python stage's queue
+    marked = df.select("doc_id", "spans",
+                       F.col("spans").isNull().alias("_null_spans"))
+    return marked.select("doc_id", F.posexplode_outer("spans").alias("pos", "span"),
+                         "_null_spans")
 
 
 def _rewrite_text_spans(
@@ -91,13 +99,10 @@ def _rewrite_text_spans(
     ``salt_buckets``: unless None, repartitions by (doc_id, _chunk) where
     ``_chunk = pos div _CHUNK`` — a mega-document's chunks spread across
     tasks before hitting Python (the skew defusal the north_rule requires),
-    and a task holds at most _CHUNK spans of any one document. The key is
-    the reassembly's phase-1 group key, so if Spark ever preserves
-    partitioning through Python nodes (4.1's EvalPythonExec drops it;
-    OPTIMIZATION_r08.md) the phase-1 exchange disappears with no change
-    here; test_exploded_pipeline_exchange_budget pins the <=3-exchange
-    budget. The span's own row carries ``pos``, so order needs no
-    co-location.
+    and a task holds at most _CHUNK spans of any one document. The
+    reassembly groups on doc_id alone, so the plan holds two exchanges, the
+    salt's and the reassembly's (test_exploded_pipeline_exchange_budget).
+    The span's own row carries ``pos``, so order needs no co-location.
     """
     salted = salt_buckets is not None
     if salted:
@@ -115,9 +120,10 @@ def _rewrite_text_spans(
     return exploded.select(
         "doc_id",
         "pos",
-        # carry the salt/chunk key through so reassemble_spans can group
-        # on the exact attribute the exchange already partitioned by
+        # the salt key, kept for plans that stop at the salt exchange;
+        # the reassembly does not read it, so column pruning drops it there
         *(["_chunk"] if salted else []),
+        "_null_spans",
         # null-span guard covers both the posexplode_outer empty-doc row
         # (pos null too) and a null ELEMENT inside a spans array (pos set):
         # either stays null instead of being rebuilt as a struct of null
@@ -133,8 +139,8 @@ def sanitize_exploded(
 ) -> DataFrame:
     """Apply the sanitize UDF to text-kind spans of an exploded frame,
     salted by (doc_id, _chunk) unless ``salt_buckets`` is None (see
-    _rewrite_text_spans; reassemble_spans needs the salted frame). Output
-    is (doc_id, pos[, _chunk], span), plus a ``span_error`` flag under a
+    _rewrite_text_spans). Output is (doc_id, pos[, _chunk], span,
+    _null_spans), plus a ``span_error`` flag under a
     non-raise ``on_error`` (summed into the document's n_span_errors by
     reassemble_spans): safe modes return struct<text, err>, so the poison
     row is explicit, never a silent pass-through. Span-for-span identical
@@ -154,53 +160,34 @@ def sanitize_exploded(
 
 
 def reassemble_spans(clean: DataFrame) -> DataFrame:
-    """(doc_id, pos, _chunk, span[, span_error]) -> (doc_id, spans[,
+    """(doc_id, pos, span, _null_spans[, span_error]) -> (doc_id, spans[,
     n_span_errors]) with order restored by pos.
 
-    Two phases bound per-group aggregation state under mega-document
-    skew: spans first collect per (doc_id, chunk) where chunk = pos div
-    ``_CHUNK`` — a *contiguous* range, so a normal (< _CHUNK spans)
-    document pays exactly one group and zero extra structure, while a
-    mega-document's chunks spread over the cluster and arrive pre-sorted;
-    the final per-doc merge only orders whole chunks and flattens. This is
-    strictly cheaper than hash-salted partials (which shred every doc into
-    single-span chunks). collect_list skips null spans, so empty docs come
-    back with an empty array rather than [null]. A ``span_error`` flag
-    (present exactly under a non-raise poison policy) is summed in both
-    phases into the document's ``n_span_errors``.
+    One ``groupBy(doc_id)``: the (pos, span) structs are collected and
+    sorted, then their spans taken. Spark collects partially in each map
+    task before the one doc_id exchange, so a mega-document's spans move
+    as per-task lists; the final merge holds a whole document in one task
+    whatever the plan. ``_chunk`` is not read, so the salted and the
+    unsalted frames both work.
 
-    Phase 1 groups on the salted frame's ``_chunk``, the salt exchange's
-    own key (see _rewrite_text_spans).
+    An empty or null array's placeholder row (null pos) collects nothing:
+    an empty array comes back empty, and a null array (``_null_spans``)
+    null, with a null n_span_errors, as on the nested plan. A null span
+    element keeps its slot. A ``span_error`` flag (present exactly under a
+    non-raise poison policy) is summed into the document's
+    ``n_span_errors``.
     """
     keyed = F.when(
         F.col("pos").isNotNull(),
         F.struct(F.col("pos").alias("pos"), F.col("span").alias("span")),
     )
+    present = ~F.bool_or("_null_spans")
     n_err = "span_error" in clean.columns
-    partial = clean.groupBy("doc_id", "_chunk").agg(
-        F.sort_array(F.collect_list(keyed)).alias("chunk_arr"),
-        *([F.sum(F.col("span_error").cast("int")).alias("n_err")] if n_err else []),
-    )
-    merged = partial.groupBy("doc_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("_chunk").alias("c"),
-                            F.col("chunk_arr").alias("arr"),
-                        )
-                    )
-                ),
-                lambda kv: kv["arr"],
-            )
-        ).alias("keyed"),
-        *([F.sum("n_err").cast("int").alias("n_span_errors")] if n_err else []),
-    )
-    return merged.select(
-        "doc_id",
-        F.transform("keyed", lambda kv: kv["span"]).alias("spans"),
-        *(["n_span_errors"] if n_err else []),
+    return clean.groupBy("doc_id").agg(
+        F.when(present, F.sort_array(F.collect_list(keyed)).getField("span"))
+        .alias("spans"),
+        *([F.when(present, F.sum(F.col("span_error").cast("int")).cast("int"))
+           .alias("n_span_errors")] if n_err else []),
     )
 
 
@@ -247,8 +234,8 @@ def extract_spans(
     topology as the sanitize flagship (``_rewrite_text_spans``): explode
     -> chunk-salted shuffle on (doc_id, _chunk) -> ONE Arrow-batched
     Python hop (engine/extract.py: boilerplate kill list + atomic-block
-    link density) applied to text-kind spans only -> two-phase chunked
-    reassembly. Media-kind
+    link density) applied to text-kind spans only -> reassemble_spans'
+    one doc_id aggregation. Media-kind
     spans pass through byte-identical and in position; the span order
     contract is sanitize_spans' exactly (kind, media_ref, offset, order
     preserved; text replaced by the extracted main content).

@@ -3394,7 +3394,7 @@ GROUP BY bi.doc_id
 def q_training_pipeline_v2(spark, sf_dir, index_dir: str | None = None):
     """Composed end-to-end training-corpus build (VERDICT r05 next-round
     #1): the round-5 operators chained into ONE production ingest run —
-    REAL sanitize (fused pandas UDF) -> heuristic + bigram-LM + OOV
+    REAL sanitize (fused Arrow UDF) -> heuristic + bigram-LM + OOV
     quality gates -> incremental exact dedup of the new batch against a
     prior digest index -> binding-language mixture-rate sampling ->
     per-shard sequence packing — reporting per-stage counts so the oracle
@@ -3929,7 +3929,7 @@ def q_main_content(spark, sf_dir):
     corpus is ASCII markup-free (asserted 0 docs matching [<>&] at all
     sf), so the content round-trips the parser byte-identically.
 
-    100 TB shape: pure map — ONE Arrow-batched pandas UDF hop, zero
+    100 TB shape: pure map — ONE Arrow-batched scalar UDF hop, zero
     shuffles (the only exchange is _spread's small-file fan-out, absent
     on real multi-split inputs); lineage yield (blocks kept/dropped)
     comes out of the same hop, no second pass."""

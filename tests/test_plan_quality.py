@@ -89,10 +89,9 @@ def test_ann_query_small_side_by_closure(spark):
 def test_salted_exchange_feeds_python_stage(spark):
     """The Arrow UDF must run AFTER the salted repartition so mega-document
     spans spread across tasks before hitting Python. Since r08 the salt key
-    is (doc_id, _chunk = pos div 256) — still mega-doc-defusing (a doc's
-    chunks spread over all buckets, <=256 spans per doc per task) AND
-    aligned with the reassembly's phase-1 group key so that groupBy needs
-    no exchange of its own (see test_reassembly_phase1_reuses_salt_exchange)."""
+    is (doc_id, _chunk = pos div 256): a doc's chunks spread over all
+    buckets, <=256 spans per doc per task. The reassembly's own exchange
+    is keyed on doc_id alone (test_exploded_pipeline_exchange_budget)."""
     df = spans_from_documents(spark, SF)
     clean = sanitize_exploded(explode_spans(df), None, salt_buckets=16)
     plan = _plan(clean)
@@ -104,23 +103,32 @@ def test_salted_exchange_feeds_python_stage(spark):
     assert "hashpartitioning(doc_id" in plan and "_chunk" in plan, plan
 
 
+def test_exploded_rows_carry_no_spans_array(spark):
+    """Each exploded row carries its document's id and null-array marker,
+    never the whole spans array: a mega-document's array copied into each
+    of its rows fills the Python stage's row queue (a heap OOM)."""
+    from html_sanitizer_spark.pipeline.synth import synth_spans_df
+
+    df = synth_spans_df(spark, 4, seed=1)
+    plan = _plan(sanitize_exploded(explode_spans(df)))
+    kept = re.search(r"Generate posexplode\(spans#\d+\), \[(.*?)\]", plan)
+    assert kept and re.fullmatch(r"doc_id#\d+, _null_spans#\d+",
+                                 kept.group(1)), plan
+
+
 @pytest.mark.parametrize("plan, salt", [
     ("sanitize_spans", 16), ("extract_spans", 16),
     ("sanitize_spans", None), ("extract_spans", None),
 ], ids=["sanitize_spans", "extract_spans",
         "sanitize_spans-no-salt", "extract_spans-no-salt"])
 def test_exploded_pipeline_exchange_budget(spark, plan, salt):
-    """r08 exchange-budget gate (guide §2.4): the full exploded pipeline
-    is exactly THREE hash exchanges — chunk salt, phase-1 (doc_id, _chunk)
-    collect, per-doc merge — and the salt keys EQUAL the phase-1 group
-    keys. Spark 4.1's EvalPythonExec drops outputPartitioning (verified
-    with a minimal repro, OPTIMIZATION_r08.md), so the phase-1 exchange
-    cannot be elided while the Arrow UDF sits between salt and reassembly;
-    if that ever changes upstream, this count drops to 2 for free because
-    the keys already line up. A 4th exchange appearing means a regression
-    (e.g. someone re-keyed the salt away from the reassembly chunks).
-    extract_spans runs on the same topology and shares the budget. With no
-    salt given, the salt exchange has one partition per task slot."""
+    """Exchange-budget gate (guide §2.4): the full exploded pipeline is
+    TWO hash exchanges — the chunk salt on (doc_id, _chunk), then the
+    reassembly's one groupBy on doc_id alone, whose partial collect runs
+    map-side before it. A 3rd exchange appearing means a regression (e.g.
+    a reassembly that groups by chunk again). extract_spans runs on the
+    same topology and shares the budget. With no salt given, the salt
+    exchange has one partition per task slot."""
     from html_sanitizer_spark.pipeline import job
 
     df = spans_from_documents(spark, SF)
@@ -129,11 +137,13 @@ def test_exploded_pipeline_exchange_budget(spark, plan, salt):
     else:
         out = job.extract_spans(spark, df, salt_buckets=salt)
     plan = _plan(out)
-    assert plan.count("Exchange hashpartitioning") <= 3, plan
-    # the salt exchange and the phase-1 aggregate share the same key pair
+    assert plan.count("Exchange hashpartitioning") <= 2, plan
     want = salt or spark.sparkContext.defaultParallelism
     assert re.search(r"hashpartitioning\(doc_id#\d+, _chunk#\d+L?, "
                      rf"{want}\), REPARTITION_BY_NUM", plan), plan
+    # the other exchange is the reassembly's, keyed on doc_id alone
+    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+, \d+\), "
+                     r"ENSURE_REQUIREMENTS", plan), plan
 
 
 def test_wholestage_codegen_on_jvm_operators(spark):

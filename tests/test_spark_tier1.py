@@ -112,26 +112,82 @@ def test_order_preserved_under_salting(spark):
     df.unpersist()
 
 
-def test_empty_and_null_spans(spark):
+def test_empty_and_null_spans(spark, tmp_path):
+    """An empty spans array comes back empty and a null one null, with a
+    null ``n_span_errors`` under a non-raise policy, on the exploded,
+    nested and checkpointed plans; a null text stays null."""
+    from html_sanitizer_spark.pipeline.checkpoint import (
+        read_checkpointed,
+        run_checkpointed,
+    )
     from html_sanitizer_spark.pipeline.synth import DOC_SCHEMA
 
+    null_text = {"kind": "text", "text": None, "media_ref": "", "offset": 0}
     df = spark.createDataFrame(
         [
             {"doc_id": "empty", "spans": []},
-            {"doc_id": "null_text", "spans": [
-                {"kind": "text", "text": None, "media_ref": "", "offset": 0}
-            ]},
+            {"doc_id": "null_spans", "spans": None},
+            {"doc_id": "null_text", "spans": [null_text]},
         ],
         schema=DOC_SCHEMA,
     )
+    want = {"empty": [], "null_spans": None, "null_text": [null_text]}
+
+    def spans(rows):
+        return {r["doc_id"]: None if r["spans"] is None
+                else [s.asDict() for s in r["spans"]] for r in rows}
+
     for explode in (True, False):
-        rows = {
-            r["doc_id"]: r["spans"]
-            for r in sanitize_spans(spark, df, explode=explode).collect()
-        }
-        assert rows["empty"] == []
-        assert len(rows["null_text"]) == 1
-        assert rows["null_text"][0]["text"] is None
+        for on_error in ("raise", "keep"):
+            rows = sanitize_spans(spark, df, explode=explode,
+                                  on_error=on_error).collect()
+            assert spans(rows) == want, (explode, on_error)
+            if on_error == "keep":
+                assert {r["doc_id"]: r["n_span_errors"] for r in rows} == {
+                    "empty": 0, "null_spans": None, "null_text": 0}
+        out = str(tmp_path / f"explode={explode}")
+        run_checkpointed(spark, df, out, explode=explode, on_error="keep")
+        assert spans(read_checkpointed(spark, out).collect()) == want
+
+
+@pytest.mark.parametrize("salt", [None, 1], ids=["unsalted", "one-bucket"])
+def test_reassemble_spans_needs_no_chunk_key(spark, salt):
+    """reassemble_spans groups on doc_id alone: over an unsalted frame,
+    which has no ``_chunk`` column, and over one salt bucket, it restores
+    the order of a document longer than two chunks and equals the nested
+    plan."""
+    from html_sanitizer_spark.functions.udfs import sanitize_spans_arrow
+    from html_sanitizer_spark.pipeline.job import (
+        _CHUNK,
+        explode_spans,
+        reassemble_spans,
+        sanitize_exploded,
+    )
+    from html_sanitizer_spark.pipeline.synth import DOC_SCHEMA
+
+    n = 2 * _CHUNK + 37
+    long_doc = [
+        {"kind": "text", "text": f"<b>span {i}</b><script>x</script>",
+         "media_ref": "", "offset": i} if i % 3 else
+        {"kind": "image", "text": f"<i>cap {i}</i>", "media_ref": f"m://{i}",
+         "offset": i}
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(
+        [{"doc_id": "long", "spans": long_doc},
+         {"doc_id": "short", "spans": long_doc[:3]}],
+        schema=DOC_SCHEMA,
+    )
+    clean = sanitize_exploded(explode_spans(df), salt_buckets=salt)
+    if salt is None:
+        assert "_chunk" not in clean.columns
+        # spread each document's spans over tasks, as a salt would
+        clean = clean.repartition(4)
+    got = {r["doc_id"]: r["spans"] for r in reassemble_spans(clean).collect()}
+    want = {r["doc_id"]: r["spans"] for r in sanitize_spans_arrow(df).collect()}
+    assert got == want
+    assert [s["offset"] for s in got["long"]] == list(range(n))
+    assert got["long"][1]["text"] == "<strong>span 1</strong>"
 
 
 def test_lineage_metrics(spark):
@@ -174,6 +230,7 @@ def test_extract_spans_passes_null_and_empty_docs(spark):
     df = spark.createDataFrame(
         [
             {"doc_id": "empty", "spans": []},
+            {"doc_id": "null_spans", "spans": None},
             {"doc_id": "null_text", "spans": [
                 {"kind": "text", "text": None, "media_ref": "", "offset": 0}
             ]},
@@ -184,4 +241,5 @@ def test_extract_spans_passes_null_and_empty_docs(spark):
         r["doc_id"]: r["spans"] for r in extract_spans(spark, df).collect()
     }
     assert rows["empty"] == []
+    assert rows["null_spans"] is None
     assert rows["null_text"][0]["text"] is None
