@@ -17,6 +17,8 @@ __version__ = "0.1.0"
 # every Python worker task unpickles a reference into this package, so
 # this import makes each worker's per-task zip re-read cheap (_zipimport)
 from . import _zipimport  # noqa: F401
+# registers the named configs in the engine's registry
+from . import configs  # noqa: F401
 from .engine.core import sanitize  # noqa: F401
 from .engine.extract import extract_main, extract_main_blocks  # noqa: F401
 from .engine.settings import Settings, get_settings  # noqa: F401

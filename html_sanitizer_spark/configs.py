@@ -1,16 +1,20 @@
-"""Named sanitizer config registry for pipelines.
+"""The reference test-suite's named config variants, and config fingerprints.
 
 The reference resolves named configs from Django settings
-(django.py:10-22); here a plain registry ships the reference test-suite's
-config variants so jobs (and the Tier 1 Spark replay) can select them by
-name. All callables are module-level → pickle-safe for UDF closures.
+(django.py:10-22); here the variants go into the engine's one named-config
+registry (engine/settings.py), so ``sanitize(html, name)``,
+``get_sanitizer(name)``, ``settings_for(name)`` and both CLIs' ``--config``
+resolve the same names, and a ``register_settings`` config too. The
+package ``__init__`` imports this module, so every process that imports
+the package has them. All callables are module-level → pickle-safe for UDF
+closures.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from .engine.settings import Settings
+from .engine.settings import _REGISTRY, Settings, get_settings
 
 __all__ = ["PIPELINE_CONFIGS", "fingerprint", "settings_for"]
 
@@ -32,8 +36,10 @@ _CLASSY_TAGS = {
     "separate": {"a", "p"},
 }
 
-PIPELINE_CONFIGS: dict[str, dict] = {
-    "default": {},
+# the engine's registry itself, not a copy: a name registered anywhere
+# resolves everywhere
+PIPELINE_CONFIGS: dict[str, dict] = _REGISTRY
+PIPELINE_CONFIGS.update({
     "nofollow": {"add_nofollow": True},
     "autolink": {"autolink": True},
     "autolink_nofollow": {"autolink": True, "add_nofollow": True},
@@ -46,22 +52,15 @@ PIPELINE_CONFIGS: dict[str, dict] = {
         "separate": (),
         "attributes": {"img": {"alt", "src"}},
     },
-}
-
-_CACHE: dict[str, Settings] = {}
+})
 
 
 def settings_for(name_or_settings) -> Settings:
+    """A Settings instance as given, else the registered config of that
+    name (None: "default")."""
     if isinstance(name_or_settings, Settings):
         return name_or_settings
-    name = name_or_settings or "default"
-    if name not in _CACHE:
-        if name not in PIPELINE_CONFIGS:
-            raise KeyError(
-                f"Unknown pipeline config {name!r}; known: {sorted(PIPELINE_CONFIGS)}"
-            )
-        _CACHE[name] = Settings(PIPELINE_CONFIGS[name])
-    return _CACHE[name]
+    return get_settings(name_or_settings or "default")
 
 
 def fingerprint(settings) -> str:

@@ -214,9 +214,11 @@ DEFAULTS = _defaults
 
 
 # ---------------------------------------------------------------------------
-# Named-config registry (django.py:10-22 analog, no Django).
-# Settings instances are memoized per process — the executor-side analog of
-# the reference's lru_cache on get_sanitizer.
+# Named-config registry (django.py:10-22 analog, no Django): the package's
+# only one. ``configs.py`` registers the reference test-suite's variants
+# beside "default"; ``configs.settings_for`` and ``sanitizer_api`` resolve
+# names here. Settings instances are memoized per process — the
+# executor-side analog of the reference's lru_cache on get_sanitizer.
 # ---------------------------------------------------------------------------
 
 _REGISTRY: dict[str, dict] = {"default": {}}

@@ -4,21 +4,25 @@ Design (SURVEY.md §2.10, §4.1): the whole tree engine is fused into ONE
 Arrow-batched hop per plan so each row crosses the Arrow boundary exactly
 once. Per-row Python UDFs are never used (north_rule requirement).
 
-One Arrow batch kernel, ``_make_batch_kernel``: a string array plus an
-apply mask in, the new strings and the error positions out. It marks the
-spans ``sanitize`` returns unchanged (printable ASCII with no ``<``, ``>``,
-``&`` or double space) with ``pyarrow.compute``, so only the other spans
-become Python strings; those run ``_make_text_kernel``, which sanitizes
-one fragment and owns the memo and the poison policy. Both UDF shapes call
-the batch kernel:
-- ``make_sanitize_udf``    — scalar Arrow UDF over a text column, for the
-  exploded span plan (Catalyst sees a deterministic expression).
-- ``sanitize_spans_arrow`` — ``mapInArrow`` over whole (doc_id, spans)
-  documents, for the nested zero-extra-shuffle plan: sanitizes text-kind
-  spans inside the array, passes media spans through byte-identical,
-  preserving order trivially.
+One Arrow batch kernel shape, ``_batch_kernel``: a string array plus an
+apply mask in, the new strings and the error positions out, over a
+per-fragment kernel. For sanitize (``_make_batch_kernel``) it marks the
+spans ``sanitize`` returns unchanged (printable ASCII with no ``<``,
+``>``, ``&`` or double space) with ``pyarrow.compute``, so only the other
+spans become Python strings; those run ``_make_text_kernel``, which
+sanitizes one fragment and owns the memo and the poison policy. For
+extract (``_make_extract_kernel``) every text span runs the extractor.
 
-``make_extract_udf`` (main-content extraction) is a scalar Arrow UDF too.
+One Arrow rebuild, ``_map_spans``: a ``mapInArrow`` over rows with a
+``spans`` column that runs a batch kernel on the text of the text-kind
+spans and passes media spans through byte-identical, order preserved
+trivially. ``sanitize_spans_arrow`` is that rebuild with the sanitize
+kernel; the pipeline runs it over whole documents (nested plan) and over
+≤256-span chunk rows (exploded plan), and ``extract_spans`` runs it with
+the extract kernel.
+
+``make_sanitize_udf`` and ``make_extract_udf`` are scalar Arrow UDFs over
+a text column, for ``queries.py``; the pipeline does not use them.
 """
 
 from __future__ import annotations
@@ -62,7 +66,8 @@ SAFE_RESULT_TYPE = T.StructType(
 
 
 def make_sanitize_udf(settings=None, memoize: int = 0, on_error: str = "raise"):
-    """Scalar Arrow UDF: sanitize a batch of HTML fragments.
+    """Scalar Arrow UDF: sanitize a batch of HTML fragments (for
+    ``queries.py``; the pipeline runs ``sanitize_spans_arrow``).
 
     ``settings`` may be a Settings instance or a registered config name;
     it is captured in the closure and shipped once per executor (the
@@ -179,22 +184,42 @@ def _clean_mask(texts):
 
 
 def _make_batch_kernel(settings, memoize: int, on_error: str):
-    """The Arrow batch kernel both UDF shapes call:
-    ``run(texts, apply=None) -> (new_texts, error_positions)``.
+    """The sanitize batch kernel: ``_batch_kernel`` over
+    ``_make_text_kernel``, with the clean-text mark (``_clean_mask``) on
+    unless ``settings.autolink`` is True or a dict, as in the engine's
+    fast path."""
+    autolink = settings_for(settings).autolink
+    return _batch_kernel(_make_text_kernel(settings, memoize, on_error),
+                         autolink is not True and not isinstance(autolink, dict))
+
+
+def _make_extract_kernel(max_link_density: float):
+    """The extract batch kernel: ``_batch_kernel`` over main-content
+    extraction (engine/extract.py), the kept blocks joined by newlines. An
+    extraction error propagates; there is no poison policy."""
+    from ..engine.extract import extract_main_blocks
+
+    def run(html: str):
+        kept, _ = extract_main_blocks(html, max_link_density=max_link_density)
+        return "\n".join(kept), False
+
+    return _batch_kernel(run, False)
+
+
+def _batch_kernel(text_kernel, mark_clean: bool):
+    """An Arrow batch kernel,
+    ``run(texts, apply=None) -> (new_texts, error_positions)``, over a
+    per-fragment ``text_kernel(text) -> (new_text, err)``.
 
     ``texts`` is a string array and ``apply`` an optional boolean mask of
     the same length (null counts as false); null texts and unapplied
-    positions come back unchanged. Of the rest, the spans ``sanitize``
-    returns unchanged are marked in Arrow (``_clean_mask``); like the
-    engine's fast path, the mark is off when ``settings.autolink`` is True
-    or a dict. Only the remaining spans become Python strings and run
-    ``_make_text_kernel`` (memo and poison policy included); their results
-    are scattered back with ``replace_with_mask``. ``error_positions`` are
-    the ascending indices of spans whose sanitize raised under a non-raise
-    ``on_error``."""
-    kernel = _make_text_kernel(settings, memoize, on_error)
-    autolink = settings_for(settings).autolink
-    mark_clean = autolink is not True and not isinstance(autolink, dict)
+    positions come back unchanged. With ``mark_clean``, the spans
+    ``sanitize`` returns unchanged are marked in Arrow (``_clean_mask``)
+    and come back unchanged too. Only the remaining spans become Python
+    strings and run ``text_kernel``; their results are scattered back with
+    ``replace_with_mask``. ``error_positions`` are the ascending indices of
+    spans whose ``err`` is set (a sanitize that raised under a non-raise
+    ``on_error``)."""
 
     def run(texts, apply=None):
         todo = texts.is_valid()
@@ -205,7 +230,7 @@ def _make_batch_kernel(settings, memoize: int, on_error: str):
         idx = pc.indices_nonzero(todo)
         if not len(idx):
             return texts, []
-        results = [kernel(t) for t in texts.take(idx).to_pylist()]
+        results = [text_kernel(t) for t in texts.take(idx).to_pylist()]
         new = pa.array([r[0] for r in results], texts.type)
         errors = [i for i, r in zip(idx.to_pylist(), results) if r[1]]
         return pc.replace_with_mask(texts, todo, new), errors
@@ -217,20 +242,27 @@ def sanitize_spans_arrow(
     df, settings=None, memoize: int = 0, on_error: str = "raise",
 ):
     """Nested zero-extra-shuffle path via ``mapInArrow`` (SURVEY.md §2.10):
-    operates on pyarrow RecordBatches directly — the flattened ``text``
-    child of every document's spans goes through the batch kernel in one
-    call, with ``apply = kind == 'text'``, and the struct and list are
-    rebuilt around it with no per-row conversion.
+    ``_map_spans`` with the sanitize batch kernel. The flattened ``text``
+    child of every row's spans goes through the kernel in one call, with
+    ``apply = kind == 'text'``, and the struct and list are rebuilt around
+    it with no per-row conversion. The rows are whole documents on the
+    nested plan and ≤256-span chunks on the exploded one (pipeline/job.py).
 
     ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8):
     keep/null are applied per span, and a non-"raise" policy appends an
-    ``n_span_errors`` int column — the per-document poison count, computed
-    from the error positions and the list offsets — the same column the
-    exploded plan's reassembly carries (filter n_span_errors > 0 →
+    ``n_span_errors`` int column — the per-row poison count, computed from
+    the error positions and the list offsets (filter n_span_errors > 0 →
     quarantine table).
     """
-    kernel = _make_batch_kernel(settings, memoize, on_error)
-    with_errors = on_error != "raise"
+    return _map_spans(df, _make_batch_kernel(settings, memoize, on_error),
+                      on_error != "raise")
+
+
+def _map_spans(df, kernel, with_errors: bool):
+    """``mapInArrow`` of ``_sanitize_documents`` over a frame with a
+    ``spans`` column: every other column passes through, and
+    ``with_errors`` appends ``n_span_errors``. The one Arrow rebuild both
+    plans and both modes (sanitize, extract) run."""
     schema = df.schema
     if with_errors:
         schema = T.StructType(
@@ -245,8 +277,8 @@ def sanitize_spans_arrow(
 
 
 def _sanitize_documents(batch, kernel, with_errors: bool):
-    """One (doc_id, spans) RecordBatch through the batch ``kernel``
-    (``_make_batch_kernel``), for ``sanitize_spans_arrow``."""
+    """One RecordBatch with a ``spans`` column through a batch ``kernel``
+    (``_batch_kernel``), for ``_map_spans``."""
     idx = batch.schema.get_field_index("spans")
     lst = batch.column(idx)
     # this batch's spans only: a sliced list's ``values`` holds its
@@ -259,8 +291,7 @@ def _sanitize_documents(batch, kernel, with_errors: bool):
     text, errors = kernel(values.field("text"), apply)
     # carry the element-level validity through the rebuild: without the
     # mask a null span element would come back as a non-null struct of
-    # null fields (ADVICE r02), diverging from the input and from the
-    # exploded path
+    # null fields (ADVICE r02), diverging from the input
     new_values = pa.StructArray.from_arrays(
         [values.field("kind"), text, values.field("media_ref"),
          values.field("offset")],

@@ -17,8 +17,10 @@ also drives the distributed path via :meth:`sanitize_df`.
 
 from __future__ import annotations
 
+import functools
+
 from .engine.core import sanitize as _sanitize_core
-from .engine.settings import Settings
+from .engine.settings import Settings, get_settings, register_settings
 
 __all__ = ["Sanitizer", "get_sanitizer", "register_sanitizer"]
 
@@ -56,24 +58,23 @@ class Sanitizer:
         return sanitize_spans(spark, df, settings=self.settings, **kwargs)
 
 
-_REGISTRY: dict[str, dict] = {"default": {}}
-_INSTANCES: dict[str, Sanitizer] = {}
-
-
 def register_sanitizer(name: str, settings: dict) -> None:
     """Named-config registration (the HTML_SANITIZERS dict analog,
-    django.py:10-19); validates eagerly like the Django system check."""
-    Sanitizer(settings)  # raises TypeError on misconfiguration
-    _REGISTRY[name] = settings
-    _INSTANCES.pop(name, None)
+    django.py:10-19) into the one registry, engine/settings.py's;
+    validates eagerly like the Django system check."""
+    register_settings(name, settings)
 
 
 def get_sanitizer(name: str = "default") -> Sanitizer:
-    """Memoized lookup (the lru_cache analog, django.py:22)."""
-    if name not in _REGISTRY:
-        raise KeyError(
-            f"Unknown sanitizer config {name!r}; registered: {sorted(_REGISTRY)}"
-        )
-    if name not in _INSTANCES:
-        _INSTANCES[name] = Sanitizer(_REGISTRY[name])
-    return _INSTANCES[name]
+    """Memoized lookup (the lru_cache analog, django.py:22): one facade per
+    registered config."""
+    return _facade(get_settings(name))
+
+
+@functools.lru_cache(maxsize=None)
+def _facade(settings: Settings) -> Sanitizer:
+    # keyed by the registry's memoized Settings instance, so re-registering
+    # a name gives a new facade
+    sanitizer = Sanitizer.__new__(Sanitizer)
+    sanitizer.settings = settings
+    return sanitizer

@@ -87,33 +87,34 @@ def test_ann_query_small_side_by_closure(spark):
 
 
 def test_salted_exchange_feeds_python_stage(spark):
-    """The Arrow UDF must run AFTER the salted repartition so mega-document
-    spans spread across tasks before hitting Python. Since r08 the salt key
-    is (doc_id, _chunk = pos div 256): a doc's chunks spread over all
-    buckets, <=256 spans per doc per task. The reassembly's own exchange
-    is keyed on doc_id alone (test_exploded_pipeline_exchange_budget)."""
+    """The Arrow stage must run AFTER the salted repartition so a
+    mega-document's chunk rows spread across tasks before hitting Python.
+    The salt key is (doc_id, _chunk = pos div 256): a doc's chunks spread
+    over all buckets, one <=256-span chunk per row. The reassembly's own
+    exchange is keyed on doc_id alone
+    (test_exploded_pipeline_exchange_budget)."""
     df = spans_from_documents(spark, SF)
     clean = sanitize_exploded(explode_spans(df), None, salt_buckets=16)
     plan = _plan(clean)
-    arrow_at = plan.index("ArrowEvalPython")
+    arrow_at = plan.index("MapInArrow")
     exch_at = plan.index("REPARTITION_BY_NUM")
     # tree prints parents first: the Exchange (child) appears after the
-    # ArrowEvalPython line, and the repartition key is the chunk salt
+    # MapInArrow line, and the repartition key is the chunk salt
     assert exch_at > arrow_at, plan
     assert "hashpartitioning(doc_id" in plan and "_chunk" in plan, plan
 
 
 def test_exploded_rows_carry_no_spans_array(spark):
-    """Each exploded row carries its document's id and null-array marker,
-    never the whole spans array: a mega-document's array copied into each
-    of its rows fills the Python stage's row queue (a heap OOM)."""
+    """Each chunk row carries its document's id beside its own slice of
+    the spans, never the whole spans array: a mega-document's array copied
+    into each of its rows fills the Python stage's row queue (a heap
+    OOM)."""
     from html_sanitizer_spark.pipeline.synth import synth_spans_df
 
     df = synth_spans_df(spark, 4, seed=1)
     plan = _plan(sanitize_exploded(explode_spans(df)))
-    kept = re.search(r"Generate posexplode\(spans#\d+\), \[(.*?)\]", plan)
-    assert kept and re.fullmatch(r"doc_id#\d+, _null_spans#\d+",
-                                 kept.group(1)), plan
+    kept = re.search(r"Generate inline\(.*?\), \[(.*?)\]", plan)
+    assert kept and re.fullmatch(r"doc_id#\d+", kept.group(1)), plan
 
 
 @pytest.mark.parametrize("plan, salt", [

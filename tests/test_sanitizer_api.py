@@ -25,7 +25,19 @@ def test_constructor_contracts_match_reference():
         Sanitizer({"tags": {"blub"}})
 
 
-def test_registry_roundtrip():
+@pytest.fixture
+def registry():
+    """Restore the named-config registry a test registers into."""
+    from html_sanitizer_spark.engine import settings
+
+    saved = dict(settings._REGISTRY)
+    yield
+    settings._REGISTRY.clear()
+    settings._REGISTRY.update(saved)
+    settings._INSTANCES.clear()
+
+
+def test_registry_roundtrip(registry):
     register_sanitizer("only_em", {"tags": {"em"}, "empty": set(),
                                    "separate": set(), "attributes": {}})
     s = get_sanitizer("only_em")
@@ -35,6 +47,54 @@ def test_registry_roundtrip():
         get_sanitizer("nope")
     with pytest.raises(TypeError):
         register_sanitizer("bad", {"tags": "x"})
+
+
+# configs.fingerprint of each named config: a checkpointed resume compares
+# the digest in its manifest with the current one, so a change here makes
+# every resume of a run started before it refuse
+_DIGESTS = {
+    "autolink": "fbcd0f7592780d8e",
+    "autolink_nofollow": "6fb70570c8dcb699",
+    "classes": "d499c9ff79c374ab",
+    "classes_mergeable": "5394238ccf35825e",
+    "default": "16d84cda9c151dd5",
+    "img": "b61e63166b154ccf",
+    "nofollow": "485f5def69ae9999",
+    "typographic": "377aef7f4549a8bf",
+}
+
+
+def test_one_registry_resolves_every_named_config(registry, tmp_path, capsys):
+    """Every named config, and one registered at run time, resolves the
+    same through ``sanitize``, ``get_sanitizer``, ``settings_for`` and the
+    engine CLI's ``--config``; the named configs' digests are pinned."""
+    from html_sanitizer_spark import sanitize
+    from html_sanitizer_spark.__main__ import main
+    from html_sanitizer_spark.configs import (
+        PIPELINE_CONFIGS,
+        fingerprint,
+        settings_for,
+    )
+    from html_sanitizer_spark.engine.settings import Settings, register_settings
+
+    html = ('<h1 class="x">T</h1><p>see www.example.com '
+            '<a href="/a" target="_blank">a</a> <img src="/i.png"></p>')
+    path = tmp_path / "in.html"
+    path.write_text(html)
+    assert sorted(PIPELINE_CONFIGS) == sorted(_DIGESTS)
+    register_settings("mine", {"tags": {"p"}, "empty": set(),
+                               "separate": set(), "attributes": {}})
+    outs = set()
+    for name in [*_DIGESTS, "mine"]:
+        want = sanitize(html, Settings(PIPELINE_CONFIGS[name]))
+        assert sanitize(html, name) == want, name
+        assert get_sanitizer(name).sanitize(html) == want, name
+        assert sanitize(html, settings_for(name)) == want, name
+        assert main(["--config", name, str(path)]) == 0
+        assert capsys.readouterr().out == want + "\n", name
+        outs.add(want)
+    assert len(outs) > 4  # the configs do differ on this input
+    assert {n: fingerprint(n) for n in _DIGESTS} == _DIGESTS
 
 
 def test_facade_matches_golden_for_every_config():

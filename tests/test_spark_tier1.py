@@ -151,11 +151,15 @@ def test_empty_and_null_spans(spark, tmp_path):
 
 
 @pytest.mark.parametrize("salt", [None, 1], ids=["unsalted", "one-bucket"])
-def test_reassemble_spans_needs_no_chunk_key(spark, salt):
+def test_reassemble_spans_needs_no_chunk_key(spark, monkeypatch, salt):
     """reassemble_spans groups on doc_id alone: over an unsalted frame,
     which has no ``_chunk`` column, and over one salt bucket, it restores
     the order of a document longer than two chunks and equals the nested
-    plan."""
+    plan, under "raise" and "keep". So do documents that end on a chunk
+    boundary or one span past it, and one with null elements either side
+    of a boundary; under "keep", poison spans either side of a boundary
+    are counted once each."""
+    from html_sanitizer_spark.functions import udfs
     from html_sanitizer_spark.functions.udfs import sanitize_spans_arrow
     from html_sanitizer_spark.pipeline.job import (
         _CHUNK,
@@ -165,29 +169,62 @@ def test_reassemble_spans_needs_no_chunk_key(spark, salt):
     )
     from html_sanitizer_spark.pipeline.synth import DOC_SCHEMA
 
+    orig = udfs.sanitize
+
+    def bomb(t, s):
+        if "BOOM" in t:
+            raise RuntimeError("poison span")
+        return orig(t, s)
+
+    monkeypatch.setattr(udfs, "sanitize", bomb)
+
+    def spans(n):
+        return [
+            {"kind": "text", "text": f"<b>span {i}</b><script>x</script>",
+             "media_ref": "", "offset": i} if i % 3 else
+            {"kind": "image", "text": f"<i>cap {i}</i>",
+             "media_ref": f"m://{i}", "offset": i}
+            for i in range(n)
+        ]
+
     n = 2 * _CHUNK + 37
-    long_doc = [
-        {"kind": "text", "text": f"<b>span {i}</b><script>x</script>",
-         "media_ref": "", "offset": i} if i % 3 else
-        {"kind": "image", "text": f"<i>cap {i}</i>", "media_ref": f"m://{i}",
-         "offset": i}
-        for i in range(n)
-    ]
-    df = spark.createDataFrame(
-        [{"doc_id": "long", "spans": long_doc},
-         {"doc_id": "short", "spans": long_doc[:3]}],
-        schema=DOC_SCHEMA,
-    )
-    clean = sanitize_exploded(explode_spans(df), salt_buckets=salt)
-    if salt is None:
-        assert "_chunk" not in clean.columns
-        # spread each document's spans over tasks, as a salt would
-        clean = clean.repartition(4)
-    got = {r["doc_id"]: r["spans"] for r in reassemble_spans(clean).collect()}
-    want = {r["doc_id"]: r["spans"] for r in sanitize_spans_arrow(df).collect()}
-    assert got == want
-    assert [s["offset"] for s in got["long"]] == list(range(n))
-    assert got["long"][1]["text"] == "<strong>span 1</strong>"
+    long_doc = spans(n)
+    nulls = spans(300)
+    nulls[_CHUNK - 1] = nulls[_CHUNK] = None
+    poison = spans(2 * _CHUNK)
+    for i in (_CHUNK - 1, _CHUNK):
+        poison[i] = {"kind": "text", "text": "<p>BOOM</p>", "media_ref": "",
+                     "offset": i}
+    docs = {"long": long_doc, "short": long_doc[:3], "nulls": nulls,
+            "at_chunk": spans(_CHUNK), "past_chunk": spans(_CHUNK + 1),
+            "two_chunks": spans(2 * _CHUNK)}
+    for on_error in ("raise", "keep"):
+        if on_error == "keep":
+            docs["poison"] = poison
+        df = spark.createDataFrame(
+            [{"doc_id": k, "spans": v} for k, v in docs.items()],
+            schema=DOC_SCHEMA,
+        )
+        clean = sanitize_exploded(explode_spans(df), salt_buckets=salt,
+                                  on_error=on_error)
+        if salt is None:
+            assert "_chunk" not in clean.columns
+            # spread each document's chunks over tasks, as a salt would
+            clean = clean.repartition(4)
+        got = {r["doc_id"]: r.asDict()
+               for r in reassemble_spans(clean).collect()}
+        want = {r["doc_id"]: r.asDict()
+                for r in sanitize_spans_arrow(df, on_error=on_error).collect()}
+        assert got == want, on_error
+        long_out = got["long"]["spans"]
+        assert [s["offset"] for s in long_out] == list(range(n))
+        assert long_out[1]["text"] == "<strong>span 1</strong>"
+        assert {k: len(v["spans"]) for k, v in got.items()} == {
+            k: len(v) for k, v in docs.items()}
+        assert got["nulls"]["spans"][_CHUNK - 1] is None
+        assert got["nulls"]["spans"][_CHUNK] is None
+    assert got["poison"]["n_span_errors"] == 2
+    assert got["long"]["n_span_errors"] == 0
 
 
 def test_lineage_metrics(spark):
@@ -221,6 +258,35 @@ def test_extract_spans_interleaved_contract(spark):
         assert spans[2]["text"] == "cap"
         assert [s["offset"] for s in spans] == [0, 1, 2]
         assert spans[1]["text"] == extract_main(case.before), doc_id
+
+
+def test_extract_spans_across_chunks(spark):
+    """A document longer than one chunk comes back from extract_spans in
+    order, every text span equal to driver-side ``extract_main_blocks``'
+    kept blocks joined by newlines, every media span unchanged."""
+    from html_sanitizer_spark.engine.extract import extract_main_blocks
+    from html_sanitizer_spark.pipeline.job import _CHUNK, extract_spans
+    from html_sanitizer_spark.pipeline.synth import DOC_SCHEMA
+
+    n = _CHUNK + 45
+    spans = [
+        {"kind": "text", "offset": i, "media_ref": "",
+         "text": f"<nav><a href='/'>Home</a></nav><p>Paragraph {i} of "
+                 f"the story, long enough to be kept as content.</p>"}
+        if i % 4 else
+        {"kind": "image", "offset": i, "media_ref": f"m://{i}",
+         "text": f"<p>caption {i}</p>"}
+        for i in range(n)
+    ]
+    df = spark.createDataFrame([{"doc_id": "long", "spans": spans}],
+                               schema=DOC_SCHEMA)
+    (row,) = extract_spans(spark, df, salt_buckets=3).collect()
+    assert len(row["spans"]) == n
+    for i, (got, s) in enumerate(zip(row["spans"], spans)):
+        want = ("\n".join(extract_main_blocks(s["text"])[0])
+                if s["kind"] == "text" else s["text"])
+        assert (got["kind"], got["offset"], got["media_ref"], got["text"]) \
+            == (s["kind"], s["offset"], s["media_ref"], want), i
 
 
 def test_extract_spans_passes_null_and_empty_docs(spark):
