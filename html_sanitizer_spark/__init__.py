@@ -7,7 +7,8 @@ interleaved text + media span documents.
 
 Layout:
   engine/     pure-stdlib sanitizer core (no Spark, no lxml)
-  functions/  Spark column functions + vectorized pandas/Arrow UDFs
+  functions/  Spark column functions + Arrow batch kernels (mapInArrow,
+              arrow_udf)
   pipeline/   batch job topology: explode -> salt -> sanitize -> reassemble,
               lineage, checkpoint/resume, deterministic fixture synthesis
 """

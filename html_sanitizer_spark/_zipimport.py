@@ -8,6 +8,11 @@ py4j and the spark-core jar, about 27k entries, 0.2 s per task. Here an
 archive is re-read only when its ``(st_mtime_ns, st_size)`` changed since
 the last read, or when it cannot be stat'ed. CPython 3.12 made the
 invalidation lazy (gh-103200), so there this module changes nothing.
+
+Where the worker daemon shim (``_daemon``) engages, it drops pyspark.zip
+and py4j from the path, but the spark-core jar and any ``--py-files`` zips
+stay; where it does not (another master, no matching installed pyspark),
+all of them stay. Either way the guard still pays.
 """
 
 import os

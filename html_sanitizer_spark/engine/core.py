@@ -16,9 +16,10 @@ Stage order matches the reference engine exactly
   7. strict clean (unwrap disallowed tags, optional nofollow)
   8. serialize + post regexes, strip wrapper
 
-This function is designed to be executed inside an Arrow-batched pandas UDF:
-it is deterministic, allocation-light for KB-sized fragments, and all config
-lives in a pickle-safe Settings captured by the UDF closure.
+This function is designed to be executed inside an Arrow batch kernel (a
+``mapInArrow`` or ``arrow_udf`` stage): it is deterministic,
+allocation-light for KB-sized fragments, and all config lives in a
+pickle-safe Settings captured by the kernel's closure.
 """
 
 from __future__ import annotations

@@ -5,8 +5,8 @@ Reproduces the settings semantics of the reference engine
 ``coerce_to_set``, constructor validation) and the named-config registry of
 ``django.py:10-22`` as a plain dict registry (no Django).
 
-The Settings object is small and pickle-safe so it can be captured in a
-pandas-UDF closure and shipped to every executor once (broadcast-by-closure).
+The Settings object is small and pickle-safe so it can be captured in an
+Arrow kernel closure and shipped to each executor once (broadcast-by-closure).
 Compiled regexes are rebuilt lazily per process (they don't pickle), which
 gives the per-executor memoization the reference gets from ``lru_cache``.
 """

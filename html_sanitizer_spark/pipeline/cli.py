@@ -109,9 +109,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--max-link-density", type=float, default=0.5,
                     help="extract mode: atomic-block link-density keep bar")
     args = ap.parse_args(argv)
-    for flag in ("buckets", "salt"):
-        if getattr(args, flag) is not None and getattr(args, flag) < 1:
-            ap.error(f"--{flag} must be at least 1")
+    for flag, least in (("buckets", 1), ("salt", 1), ("parallelism", 1),
+                        ("memoize", 0)):
+        if getattr(args, flag) is not None and getattr(args, flag) < least:
+            ap.error(f"--{flag} must be at least {least}")
     if args.mode == "extract":
         # sanitize-only flags are errors here, not silently ignored
         for flag in ("config", "on_error", "memoize", "nested"):

@@ -1,7 +1,8 @@
 """``get_spark``'s master: ``parallelism``, else the spark-submit launch's,
-else ``SPARK_GRAFT_CPUS``, else the process's CPU-affinity count. Checked on
-a recording builder, so no second Spark session starts, and once through a
-real spark-submit."""
+else ``SPARK_GRAFT_CPUS``, else the process's CPU-affinity count; and the
+worker daemon shim, set on local masters only. Checked on a recording
+builder, so no second Spark session starts, and once through a real
+spark-submit."""
 
 from __future__ import annotations
 
@@ -40,6 +41,8 @@ class _Builder:
 def conf_of(monkeypatch):
     monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    # a spark-submit launch's master, read from its JVM in a real launch
+    monkeypatch.setattr(session, "_launch_master", lambda: "yarn")
 
     def conf_of(**kw):
         monkeypatch.setattr(session, "SparkSession",
@@ -68,6 +71,34 @@ def test_spark_submit_launch_keeps_its_master(conf_of, monkeypatch):
     assert "spark.sql.shuffle.partitions" not in conf
     assert conf_of(shuffle_partitions=7)["spark.sql.shuffle.partitions"] == "7"
     assert conf_of(parallelism=2)["master"] == "local[2]"
+
+
+DAEMON = "spark.python.daemon.module"
+PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def test_local_masters_start_the_workers_through_the_shim(conf_of):
+    """On a local master the workers run on this host, so the daemon can
+    import the shim from the package root on their path."""
+    for conf in (conf_of(), conf_of(executors=2)):
+        assert conf[DAEMON] == "html_sanitizer_spark._daemon"
+        assert conf[PYTHONPATH] == REPO
+    extra = {PYTHONPATH: "/elsewhere"}
+    assert conf_of(extra_conf=extra)[PYTHONPATH].split(os.pathsep) == [
+        REPO, "/elsewhere"]
+
+
+def test_spark_submit_launch_gets_the_shim_only_on_a_local_master(
+        conf_of, monkeypatch):
+    """A remote executor's daemon could not import the shim from this
+    host's package root: there Spark's default daemon stays."""
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    conf = conf_of()
+    assert DAEMON not in conf and PYTHONPATH not in conf
+    monkeypatch.setattr(session, "_launch_master", lambda: "local[2]")
+    conf = conf_of()
+    assert conf[DAEMON] == "html_sanitizer_spark._daemon"
+    assert conf[PYTHONPATH] == REPO
 
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None,
